@@ -383,11 +383,12 @@ def simhash_table(
                 )
         raise AssertionError(j)
 
-    # Timing note (r5 bench triage): this 33-aggregate groupBy compiles a
-    # large generated class, so the FIRST execution in a session pays
-    # ~2s of janino/JIT on top of the ~2.9s steady state at sf0.1 (5.0s
-    # cold vs 2.9s warm, measured). That is session-warmup, not a plan
-    # property — bench.py's >=1.5x suspect re-run rule now absorbs it.
+    # Timing note: this 33-aggregate groupBy compiles a large generated
+    # class, so the FIRST execution in a session pays ~2s of janino/JIT
+    # on top of the ~2.9s steady state at sf0.1 (5.0s cold vs 2.9s warm,
+    # measured). That is session warm-up, not a plan property; bench.py
+    # re-runs a row once when it exceeds 1.3-1.5x its prior record and
+    # keeps the min.
     votes = with_chunks.groupBy(id_col).agg(
         F.count("*").alias("_n"),
         *[F.sum(vote_bit(j)).alias(f"_b{j}") for j in range(1, nbits + 1)],

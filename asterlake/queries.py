@@ -38,6 +38,7 @@ aggregations, windows, set ops, semi/anti joins, rollup, pivot, top-k.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -3578,183 +3579,157 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _corpus_clusters(spark, sf_dir)
 
 
-# q_dedup_clusters and q_dedup_survivors need the IDENTICAL pairs->closure
-# subtree over the full corpus; connected-components labels come back
-# localCheckpoint-materialized, so memoizing the DataFrame per
-# (application, sf_dir) makes the second consumer's closure free instead
-# of re-running 2-3 shuffle rounds (round-3 verdict stretch item). Keyed
-# on applicationId so a restarted SparkContext never serves dead RDDs.
-_CLUSTERS_CACHE: dict = {}
-
-# Same memo pattern for the percentile machinery's distinct-value counts:
-# q_trimmed_stats and q_sketch_distinct both rank the identical
-# (lineitem, l_returnflag, l_extendedprice) counts table (the probs
-# differ, but the counts are probs-independent), so the persist()
-# materializes once per (application, sf_dir) instead of twice
-# (round-4 verdict #4).
-_FLAG_PRICE_COUNTS_CACHE: dict = {}
+# Cross-query memos. A few query families read the IDENTICAL intermediate
+# (a distinct-value counts table, a connected-components closure), so the
+# family's memo builds it once per (application, sf_dir) and every rider
+# reuses the materialized frame. Keyed on applicationId so a restarted
+# SparkContext never serves dead RDDs. Memoized frames are never
+# registered with exact_percentiles' per-call release, so riders keep
+# their memo hit. Values: name -> (build_fn, rider query names); the
+# bench times each build as its own row right before the family's first
+# rider, so the one-time build cost does not land on whichever rider
+# runs first.
+MEMO_BUILDERS: dict = {}
 
 
+def _memo(name: str, riders: tuple[str, ...]):
+    """Register ``build(spark, sf_dir)`` in MEMO_BUILDERS as ``name``,
+    shared by the ``riders`` queries, and cache its frame per
+    (applicationId, sf_dir) in the returned function's ``cache`` dict."""
+
+    def deco(build: SparkQuery) -> SparkQuery:
+        cache: dict = {}
+
+        @functools.wraps(build)
+        def memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
+            key = (spark.sparkContext.applicationId, sf_dir)
+            cached = cache.get(key)
+            if cached is None:
+                cached = cache[key] = build(spark, sf_dir)
+            return cached
+
+        memoized.cache = cache
+        MEMO_BUILDERS[name] = (memoized, riders)
+        return memoized
+
+    return deco
+
+
+# The pairs->closure subtree over the full corpus. Connected-components
+# labels come back localCheckpoint-materialized, so a memo hit skips the
+# closure's 2-3 shuffle rounds.
+@_memo(
+    "memo_build_corpus_clusters",
+    ("q_dedup_clusters", "q_dedup_survivors", "q_split_leakage_safe"),
+)
+def _corpus_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from asterlake.operators.dedup import ngram_jaccard_pairs
+    from asterlake.operators.graph import duplicate_clusters
+
+    d = load_table(spark, sf_dir, "documents")
+    pairs = ngram_jaccard_pairs(d, n=3, threshold=0.5).select(
+        "doc_a", "doc_b"
+    )
+    return duplicate_clusters(pairs, d)
+
+
+# (lineitem, l_returnflag, l_extendedprice) distinct-value counts: both
+# riders rank this table (the probs differ, but the counts are
+# probs-independent).
+@_memo(
+    "memo_build_flag_price_counts", ("q_trimmed_stats", "q_sketch_distinct")
+)
 def _flag_price_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from asterlake.operators.stats import distinct_value_counts
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _FLAG_PRICE_COUNTS_CACHE.get(key)
-    if cached is None:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_returnflag", "l_extendedprice"
-        )
-        cached = _FLAG_PRICE_COUNTS_CACHE[key] = distinct_value_counts(
-            li, ["l_returnflag"], "l_extendedprice"
-        )
-    return cached
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_extendedprice"
+    )
+    return distinct_value_counts(li, ["l_returnflag"], "l_extendedprice")
 
 
-# GLOBAL l_extendedprice distinct-value counts, shared by
-# q_histogram_equidepth (decile boundaries) and q_range_layout_stats
-# (range-partition cut points) — a constant "_g" group so the memo can
-# ride exact_percentiles' grouped counts= path. Memoized counts are
-# never registered with the per-call cache release (r7), so the second
-# consumer keeps its memo hit; before this memo the reuse happened only
-# incidentally through Spark's plan-matching cache lookup, which the
-# ADVICE-directed release correctly stopped (bench: the pair cost
-# +2.4s/round until routed through the explicit memo).
-_GLOBAL_PRICE_COUNTS_CACHE: dict = {}
-
-
+# GLOBAL l_extendedprice distinct-value counts: decile boundaries for
+# q_histogram_equidepth and range-partition cut points for
+# q_range_layout_stats. A constant "_g" group lets the memo ride
+# exact_percentiles' grouped counts= path.
+@_memo(
+    "memo_build_global_price_counts",
+    ("q_histogram_equidepth", "q_range_layout_stats"),
+)
 def _global_price_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from asterlake.operators.stats import distinct_value_counts
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GLOBAL_PRICE_COUNTS_CACHE.get(key)
-    if cached is None:
-        li = (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_extendedprice")
-            .withColumn("_g", F.lit(0))
-        )
-        cached = _GLOBAL_PRICE_COUNTS_CACHE[key] = distinct_value_counts(
-            li, ["_g"], "l_extendedprice"
-        )
-    return cached
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_extendedprice")
+        .withColumn("_g", F.lit(0))
+    )
+    return distinct_value_counts(li, ["_g"], "l_extendedprice")
 
 
 # (l_returnflag, l_quantity) distinct-value counts carrying BOTH
 # aggregates the family needs — the unweighted row count
 # (q_percentiles_exact) and the revenue-cents weight sum
 # (q_weighted_median) — so the two queries share ONE lineitem scan +
-# hash aggregate instead of building near-identical counts tables twice
-# (r7 verdict ask #4: extend the explicit-memo pattern with the release
-# contract still active; memoized frames are never registered with
-# exact_percentiles' per-call release). Each consumer projects its
-# column to the ``_cnt`` name the counts= contract expects; projections
-# of one persisted frame both read the same InMemoryTableScan.
+# hash aggregate. Each consumer projects its column to the ``_cnt`` name
+# the counts= contract expects; projections of one persisted frame both
+# read the same InMemoryTableScan.
 #
-# Bit-exactness argument (also the rotation exemption for the two
-# consumers): _cnt is count(*) over the identical (flag, _v) groups the
-# standalone build aggregates; _wcnt reproduces the weighted path's
-# pre-aggregation NULL/non-positive filter as a conditional sum (rows
-# the standalone form drops contribute NULL, which sum skips; values
-# whose every row is dropped yield _wcnt NULL and are filtered by the
-# weighted consumer — exactly the rows the standalone filter removes
+# Bit-exactness argument: _cnt is count(*) over the identical (flag, _v)
+# groups the standalone build aggregates; _wcnt reproduces the weighted
+# path's pre-aggregation NULL/non-positive filter as a conditional sum
+# (rows the standalone form drops contribute NULL, which sum skips;
+# values whose every row is dropped yield _wcnt NULL and are filtered by
+# the weighted consumer — exactly the rows the standalone filter removes
 # before groupBy). Counts are exact integers either way, so the
 # interpolated doubles downstream are bit-identical.
-_FLAG_QTY_COUNTS_CACHE: dict = {}
-
-
+@_memo(
+    "memo_build_flag_qty_counts", ("q_percentiles_exact", "q_weighted_median")
+)
 def _flag_qty_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _FLAG_QTY_COUNTS_CACHE.get(key)
-    if cached is None:
-        li = load_table(spark, sf_dir, "lineitem")
-        cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
-        base = li.select(
-            "l_returnflag",
-            F.col("l_quantity").cast("double").alias("_v"),
-            cents.alias("_w"),
-        ).where(F.col("_v").isNotNull())
-        cached = _FLAG_QTY_COUNTS_CACHE[key] = (
-            base.groupBy("l_returnflag", "_v")
-            .agg(
-                F.count("*").alias("_cnt"),
-                F.sum(
-                    F.when(
-                        F.col("_w").isNotNull() & (F.col("_w") > 0),
-                        F.col("_w").cast("bigint"),
-                    )
-                ).alias("_wcnt"),
-            )
-            .persist()
+    li = load_table(spark, sf_dir, "lineitem")
+    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    base = li.select(
+        "l_returnflag",
+        F.col("l_quantity").cast("double").alias("_v"),
+        cents.alias("_w"),
+    ).where(F.col("_v").isNotNull())
+    return (
+        base.groupBy("l_returnflag", "_v")
+        .agg(
+            F.count("*").alias("_cnt"),
+            F.sum(
+                F.when(
+                    F.col("_w").isNotNull() & (F.col("_w") > 0),
+                    F.col("_w").cast("bigint"),
+                )
+            ).alias("_wcnt"),
         )
-    return cached
+        .persist()
+    )
 
 
-def clear_query_memos() -> None:
-    """Release and forget the four explicit cross-query memo caches
-    (clusters closure, flag-price / global-price / flag-qty counts) so
-    the NEXT call re-executes the build. Exists for the bench harness
-    (r13 verdict ask #2): a retime or cold-rerun sample of a memoized
-    query must measure a real re-execution, not a memo hit — without
-    this, q_dedup_clusters "retimed" at 0.02s against a 3.9s cold and
-    the artifact attributed the honest one-time closure cost as a box
-    spike. Unpersist is best-effort (localCheckpoint RDDs are released
-    by the ContextCleaner once the reference drops)."""
-    for cache in (
-        _CLUSTERS_CACHE,
-        _FLAG_PRICE_COUNTS_CACHE,
-        _GLOBAL_PRICE_COUNTS_CACHE,
-        _FLAG_QTY_COUNTS_CACHE,
-    ):
-        for df in cache.values():
+# Module-level handles on each memo's cache, for callers that inspect it.
+_CLUSTERS_CACHE = _corpus_clusters.cache
+_FLAG_PRICE_COUNTS_CACHE = _flag_price_counts.cache
+_GLOBAL_PRICE_COUNTS_CACHE = _global_price_counts.cache
+_FLAG_QTY_COUNTS_CACHE = _flag_qty_counts.cache
+
+
+def clear_query_memos(*names: str) -> None:
+    """Release and forget the named memos (default: every memo in
+    MEMO_BUILDERS) so the NEXT call re-executes the build: a bench
+    retime of a memo row must measure a real re-execution, not a memo
+    hit. Unpersist is best-effort (localCheckpoint RDDs are released by
+    the ContextCleaner once the reference drops)."""
+    for name in names or MEMO_BUILDERS:
+        build = MEMO_BUILDERS[name][0]
+        for df in build.cache.values():
             try:
                 df.unpersist()
             except Exception:
                 pass
-        cache.clear()
-
-
-def _corpus_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from asterlake.operators.dedup import ngram_jaccard_pairs
-    from asterlake.operators.graph import duplicate_clusters
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CLUSTERS_CACHE.get(key)
-    if cached is None:
-        d = load_table(spark, sf_dir, "documents")
-        pairs = ngram_jaccard_pairs(d, n=3, threshold=0.5).select(
-            "doc_a", "doc_b"
-        )
-        cached = _CLUSTERS_CACHE[key] = duplicate_clusters(pairs, d)
-    return cached
-
-
-# The four explicit cross-query memo builds, named (r15, r14 verdict ask
-# #7): the bench harness times each build as its OWN row placed right
-# before the family's first member, so the one-time build cost stops
-# landing on whichever family member happens to run first (r14:
-# q_dedup_clusters 7.64 s driver cold vs 2.2 s steady, whipsawing with
-# execution order). Values: name -> (build_fn, rider query names). The
-# build is still paid ONCE PER PROCESS-RUN from the parquet inputs —
-# nothing persists across bench invocations; this is attribution, not
-# caching.
-MEMO_BUILDERS: dict = {
-    "memo_build_corpus_clusters": (
-        _corpus_clusters,
-        ("q_dedup_clusters", "q_dedup_survivors", "q_split_leakage_safe"),
-    ),
-    "memo_build_flag_price_counts": (
-        _flag_price_counts,
-        ("q_trimmed_stats", "q_sketch_distinct"),
-    ),
-    "memo_build_global_price_counts": (
-        _global_price_counts,
-        ("q_histogram_equidepth", "q_range_layout_stats"),
-    ),
-    "memo_build_flag_qty_counts": (
-        _flag_qty_counts,
-        ("q_percentiles_exact", "q_weighted_median"),
-    ),
-}
+        build.cache.clear()
 
 
 # Oracle for the leakage-safe split: reuse the registered recursive-CTE
@@ -12829,302 +12804,3 @@ def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_media(media), bands=4, max_hamming=3
     )
 
-
-# ---------------------------------------------------------------------------
-# Driver scoring order
-# ---------------------------------------------------------------------------
-# The correctness driver walks QUERIES in declaration order under a finite
-# budget (every round so far scored exactly the first 50), so this block is
-# a ROTATION: each round the longest-unverified queries move to the front.
-#
-# Since r7 the promotion is MECHANICAL, not hand-maintained: the r5 and r6
-# rounds both had operators change AFTER the front froze, leaving green
-# driver rows older than the code they vouch for. asterlake/rotation.py
-# derives "queries touched since the last driver round commit" from git
-# diff (statement-level spans, name-wise propagation along the import
-# graph), and tests/test_rotation.py asserts every touched query — minus
-# the explicitly-justified exemptions below — sits inside the first-50
-# front AT ALL TIMES. An operator edit after this block was last frozen
-# turns the suite red until the front is re-frozen, so the freeze is
-# provably no older than the last operator commit (r6 verdict ask #6).
-#
-# The r10 front plan executed verbatim in round 11 (see the r11 lists
-# below): the 26 r7-era rows lead, the balance is r8-era name-
-# ascending freshness rotation plus this round's touched/new queries.
-# Frozen via rotation.suggest_front and kept in sync at every
-# mid-round declaration (the late-declaration lesson from r9).
-#
-# The r11 front executed verbatim in round 12 (CORRECTNESS_r11: 50/50
-# green). After the r11 driver file landed, the oldest cohort is the 48
-# r8-era rows — more than the 50-slot budget minus this round's new/
-# touched block, so two spill with documented cross-coverage (below)
-# and lead the r13 rotation.
-#
-# The r12 front executed verbatim in round 13's inputs
-# (CORRECTNESS_r12: 50/50 green), and the r13 front executed verbatim
-# in round 14's inputs (CORRECTNESS_r13: 50/50 green — the 12 r13
-# declarations, the two r8 spills, and 36 r9-era rows all scored).
-#
-# R14 FRONT (executed below): the r13 verdict's plan, verbatim — the
-#   six queries round 14 touched or declared lead by the touched/never-
-#   scored rules (q_kcore_exact, q_phash_near_dup, q_pii_scan new;
-#   q_ngram_overlap_eval, q_stream_cdc_apply, q_theta_similarity_join
-#   touched by the r13-ADVICE/ask fixes), then the 13 spilled r9 rows
-#   (the rotation's last old tail — after this round scores, NO row is
-#   older than r10), then 31 of the 47 r10-era rows name-ascending.
-#   The 16 r10 rows the budget cuts carry the spill notes below and
-#   lead the r15 front.
-#
-# R15 FRONT PLAN: the 16 spilled r10 rows (q_media_decode_real,
-#   q_media_gif_anim, q_media_mp4_meta, q_mixture_apply,
-#   q_mixture_weights, q_pack_sequences, q_pagerank_copurchase,
-#   q_quality_ensemble, q_recursive_month_spine, q_snapshot_scan_bloom,
-#   q_unigram_seed_vocab, q_unigram_segment, q_window_event_gaps,
-#   q_window_frames, q_window_navigation, q_window_range_frames) lead,
-#   then the r11-era cohort name-ascending; plus whatever round 15
-#   touches or declares (freeze AFTER the round's last operator
-#   commit, via rotation.suggest_front).
-
-# No exemptions this round: every query rotation.queries_touched()
-# flags sits inside the front below. (The r13 exemption entries were
-# scoped to diffs between the r12 and r13 driver commits — invisible
-# to the current freeze base — and are dropped rather than left to
-# mask a future real touch.)
-_R15_OPT_EXEMPT_NOTE = (
-    "r15 OPTIMIZATION round: execution-plan / runtime-conf / driver-"
-    "overhead change only; results bit-identical - verified by the full "
-    "DuckDB parity sweep at the optimized tree plus per-change "
-    "same-session sorted-row A/B (OPTIMIZATION_r15.md)"
-)
-# Exemptions are ROUND-SCOPED (r14 ADVICE): each batch is pinned to the
-# scoring-freeze base it was justified against, and test_rotation fails
-# the moment the driver's next CORRECTNESS commit advances the base —
-# so a stale exemption can never silently excuse a FUTURE semantic edit.
-# (The 153 r14 entries were dropped at r15 round-start for exactly that
-# reason: their justifying diffs are invisible to the current base.)
-_EXEMPT_FREEZE_BASE = "7f9ef5e9ab11eeb02eca9e35ae3f62174c69249c"
-_AUTO_PROMOTE_EXEMPT: dict[str, str] = dict.fromkeys(
-    [
-    "flagship_revenue_by_nation",
-    "q_ann_adc_multi",
-    "q_ann_ivf_assign",
-    "q_ann_ivf_search",
-    "q_ann_opq_search",
-    "q_ann_pq_search",
-    "q_ann_srp_buckets",
-    "q_ann_srp_multiprobe",
-    "q_array_agg_sorted",
-    "q_array_functions",
-    "q_asof_click_error",
-    "q_auc_exact",
-    "q_bfs_distances",
-    "q_bloom_semi_join",
-    "q_bm25_search",
-    "q_bpe_segment",
-    "q_cdc_apply",
-    "q_clustering_pair_metrics",
-    "q_cms_frequencies",
-    "q_cohens_kappa",
-    "q_cohort_retention",
-    "q_collocations_pmi",
-    "q_conditional_agg",
-    "q_corpus_survivors",
-    "q_correlated_subqueries",
-    "q_count_distinct",
-    "q_cube_revenue",
-    "q_date_arithmetic",
-    "q_decontaminate",
-    "q_dedup_clusters",
-    "q_dedup_exact",
-    "q_dedup_latest_order",
-    "q_dedup_minhash_lsh",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_semantic",
-    "q_dedup_semantic_incremental",
-    "q_dedup_simhash_pairs",
-    "q_dedup_substrings_incremental",
-    "q_dedup_winnow",
-    "q_dedup_winnow_incremental",
-    "q_dim_date",
-    "q_dim_segment",
-    "q_drift_numeric",
-    "q_drift_tvd",
-    "q_embedding_block_neighbors",
-    "q_embedding_pca",
-    "q_embedding_srp_neighbors",
-    "q_ewma_value",
-    "q_fact_star_join",
-    "q_filter_predicates",
-    "q_forget_cascade",
-    "q_full_outer_join",
-    "q_funnel_conversion",
-    "q_fuzzy_name_pairs",
-    "q_gapfill_locf",
-    "q_golden_record",
-    "q_graph_triangles",
-    "q_grouped_map_deltas",
-    "q_grouping_sets",
-    "q_histogram_prices",
-    "q_hybrid_search",
-    "q_incremental_agg_merge",
-    "q_join_anti",
-    "q_join_semi",
-    "q_json_extract",
-    "q_k_anonymity",
-    "q_k_anonymous_release",
-    "q_kcore_decompose",
-    "q_kll_quantile_rollup",
-    "q_l_diversity",
-    "q_label_propagation",
-    "q_linkage_eval",
-    "q_min_cost_supplier",
-    "q_minhash_jaccard_estimate",
-    "q_mixture_apply",
-    "q_mixture_temperature",
-    "q_mixture_weights",
-    "q_monthly_revenue",
-    "q_normalize_text",
-    "q_ohlc_bars",
-    "q_pack_manifest",
-    "q_pack_sequences",
-    "q_pagerank_copurchase",
-    "q_percentiles_exact",
-    "q_pivot_status",
-    "q_posexplode_tokens",
-    "q_pricing_summary",
-    "q_projection_arithmetic",
-    "q_quality_ensemble",
-    "q_quality_gate_text",
-    "q_quality_logistic",
-    "q_quarantine_expectations",
-    "q_quota_sample",
-    "q_range_join_clicks_before_error",
-    "q_range_layout_stats",
-    "q_record_linkage",
-    "q_recursive_month_spine",
-    "q_rollup_pricing",
-    "q_rrf_fuse",
-    "q_salted_join_top_customers",
-    "q_sample_stratified",
-    "q_scalar_functions",
-    "q_scd2_intervals",
-    "q_schema_drift_union",
-    "q_scrub_substrings",
-    "q_segment_quality_scrub",
-    "q_session_window",
-    "q_sessionization",
-    "q_set_ops",
-    "q_simhash_fingerprint",
-    "q_sketch_overlap",
-    "q_sketch_rollup_merge",
-    "q_skew_report",
-    "q_small_quantity_revenue",
-    "q_snapshot_diff",
-    "q_snapshot_scan_bloom",
-    "q_snapshot_scan_pruned",
-    "q_split_assign",
-    "q_split_leakage_safe",
-    "q_stream_frequent",
-    "q_stream_linkage",
-    "q_stream_static_join",
-    "q_string_functions",
-    "q_table_profile",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_quality",
-    "q_text_redact",
-    "q_text_vocab_topk",
-    "q_theta_set_ops",
-    "q_top3_orders_per_segment",
-    "q_topk_orders",
-    "q_training_mix",
-    "q_udaf_iqr",
-    "q_udf_vector_norm",
-    "q_unigram_seed_vocab",
-    "q_unigram_segment",
-    "q_variant_extract",
-    "q_weighted_sample",
-    "q_window_event_gaps",
-    "q_window_frames",
-    "q_window_navigation",
-    "q_window_range_frames",
-    "q_winnow_fingerprints",
-    "q_wordpiece_segment",
-    "q_zorder_stats",
-    ],
-    _R15_OPT_EXEMPT_NOTE,
-)
-
-# Round-15 front (exactly 50), re-frozen AFTER the round's last
-# operator commit and verified equal to the mechanical derivation
-# (rotation.suggest_front over the declared set with THIS round's
-# justified exemption set — checked at freeze time: suggested == this
-# block, element for element). No new queries this round; the 48
-# touched-but-front rows stay (the driver re-verifies that many of the
-# round's bit-identical optimization touches directly), and the two
-# untouched r14-green rows the budget frees (q_phash_near_dup,
-# q_stream_quarantine — both scored green in CORRECTNESS_r14) hand
-# their slots to the two OLDEST rows in rotation, the last r10-scored
-# media decoders (q_media_decode_real, q_media_gif_anim).
-_R15_FRONT = [
-    "q_ann_int8_topk",
-    "q_ann_ivfpq_search",
-    "q_ann_topk_bruteforce",
-    "q_anomaly_outliers",
-    "q_bigram_greedy_decode",
-    "q_bigram_loglik",
-    "q_cdc_shared_chunks",
-    "q_chunk_documents",
-    "q_cms_join_size",
-    "q_collocations_lift",
-    "q_compression_signal",
-    "q_contamination_scores",
-    "q_curation_pipeline",
-    "q_decayed_engagement",
-    "q_dedup_containment",
-    "q_dedup_incremental",
-    "q_dedup_ngram_prefix",
-    "q_dedup_normalized",
-    "q_dedup_spans",
-    "q_dedup_substrings",
-    "q_dedup_survivors",
-    "q_denylist_scan",
-    "q_doc_rarity",
-    "q_domain_caps",
-    "q_dsir_select",
-    "q_embedding_centroids",
-    "q_embedding_dup_clusters",
-    "q_embedding_normalize",
-    "q_frequent_tokens",
-    "q_histogram_equidepth",
-    "q_kcore_exact",
-    "q_kmeans_step",
-    "q_ngram_overlap_eval",
-    "q_pii_scan",
-    "q_set_ops_all",
-    "q_shipping_priority",
-    "q_sketch_distinct",
-    "q_stream_cdc_apply",
-    "q_table_checksum",
-    "q_text_repetition",
-    "q_tfidf_top_terms",
-    "q_theta_similarity_join",
-    "q_trimmed_stats",
-    "q_twap_value",
-    "q_udtf_sentences",
-    "q_unpivot_measures",
-    "q_waiting_supplier_orders",
-    "q_weighted_median",
-    "q_media_decode_real",
-    "q_media_gif_anim",
-]
-_FRONT = _R15_FRONT
-
-
-
-assert set(_FRONT) <= set(QUERIES), sorted(set(_FRONT) - set(QUERIES))
-assert len(set(_FRONT)) == len(_FRONT), "duplicate in ordering front block"
-# exactly the 50-query budget: nothing in the front can age out this round
-assert len(_FRONT) == 50, len(_FRONT)
-_REST = [n for n in QUERIES if n not in _FRONT]
-QUERIES = {n: QUERIES[n] for n in _FRONT + _REST}

@@ -15,11 +15,15 @@ timing measures the engine, not result transfer.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
 import sys
 import time
+
+# Besides every memo row, the slowest cold query rows get a warm re-time.
+RETIME_SLOWEST = 10
 
 
 def main() -> None:
@@ -27,7 +31,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
-    from asterlake.queries import QUERIES
+    from asterlake.queries import MEMO_BUILDERS, QUERIES, clear_query_memos
     from asterlake.session import build_session
 
     # the JVM inherits fd1 and its unified logging (e.g. [warning][gc,alloc]
@@ -66,16 +70,10 @@ def main() -> None:
             "noop"
         ).mode("overwrite").save()
         # warm the percentile rank machinery on SYNTHETIC data that
-        # shares no memo with any declared query (r8 verdict "What's
-        # wrong" #3: q_percentiles_exact recorded 11.6s cold vs
-        # 0.85-1.8s warm steady state — first-execution compilation of
-        # the two-level bucket-rank plan shape landing on whichever
-        # family member runs first; eager memo materialization does NOT
-        # fix it, compiling the plan shape does). Same cost class as
-        # the flagship/mapInPandas warms above: one-time JIT no
-        # steady-state execution pays. Local A/B at sf0.1, quiet box:
-        # family first-runs 26.7s -> 17.6s with this warm in place
-        # (percentiles 4.8 -> 2.9 cold, trimmed_stats 10.5 -> 4.8).
+        # shares no memo with any declared query: the first execution of
+        # the two-level bucket-rank plan shape pays a one-time compile
+        # that lands on whichever family member runs first (measured at
+        # sf0.1: family first-runs 26.7s -> 17.6s with this warm).
         from pyspark.sql import functions as _F
 
         from asterlake.operators.stats import exact_percentiles
@@ -88,21 +86,13 @@ def main() -> None:
             "noop"
         ).mode("overwrite").save()
         # ... and the WEIGHTED variant: weight= routes through a
-        # different rank-plan shape, i.e. a different generated class —
-        # unwarmed, its first execution (q_weighted_median) paid the
-        # same one-time compile the unweighted warm had just removed
-        # from the rest of the family (traced: 14.5s first, 1.4s on the
-        # immediate retry, every other family member 2-5s).
+        # different rank-plan shape, i.e. a different generated class
         exact_percentiles(
             _synth.withColumn("w", (_F.col("v") % 7 + 1).cast("double")),
             ["g"], "v", [0.5], weight="w",
         ).write.format("noop").mode("overwrite").save()
-        # ... and the BAND-BROADCAST-REAGGREGATE shape those percentile
-        # bands feed (r9 verdict ask #4: the warm block covered the rank
-        # shapes but not the aggregate -> groups-sized-band broadcast ->
-        # count_if/decimal-sum reaggregate that q_trimmed_stats LEADS —
-        # its driver cold recorded 10.75s vs 3.09s retime). Same
-        # synthetic frame, no memo shared with any declared query.
+        # ... and the band-broadcast-reaggregate shape those percentile
+        # bands feed (q_trimmed_stats)
         _bands = exact_percentiles(_synth, ["g"], "v", [0.05, 0.95])
         (
             _synth.join(_F.broadcast(_bands), "g")
@@ -119,12 +109,9 @@ def main() -> None:
             )
             .write.format("noop").mode("overwrite").save()
         )
-        # ... and the PageRank iteration classes (r9 verdict ask #5:
-        # 6.00 -> 9.23s driver with an UNCHANGED audited plan; builder
-        # session 7.70s). A 2-round run on a synthetic 200-edge graph
-        # compiles the per-round join/sum generated classes and the
-        # localCheckpoint machinery once, outside any timed region —
-        # the same one-time-JIT cost class as the warms above.
+        # ... and the PageRank iteration classes: a 2-round run on a
+        # synthetic graph compiles the per-round join/sum generated
+        # classes and the localCheckpoint machinery once
         from asterlake.operators.graph import pagerank_fixed_point
 
         _edges = spark.range(200).select(
@@ -134,11 +121,9 @@ def main() -> None:
         pagerank_fixed_point(_edges, iters=2).write.format("noop").mode(
             "overwrite"
         ).save()
-        # ... and the r11 static-graph classes on the same synthetic
-        # frame: triangle_counts' orientation-join/wedge-join shapes
-        # (measured cold 12.9s vs warm 4.8s at sf0.1 — the gap is the
-        # same one-time compile class) and label_propagation's per-round
-        # join + combinable-argmax shapes (cold 14.5s vs warm 5.3s).
+        # ... and the static-graph classes on the same synthetic frame:
+        # triangle_counts' orientation/wedge joins and
+        # label_propagation's per-round join + argmax
         from asterlake.operators.graph import (
             label_propagation,
             triangle_counts,
@@ -152,13 +137,11 @@ def main() -> None:
         ).save()
 
         # Execution order: cheapest-first by the last recorded run
-        # (BENCH_FULL.json, committed). Two reasons: (a) C2/janino JIT
-        # warms on the cheap half instead of inflating the first heavy
-        # iterative/stream queries (measured: the identical closure query
-        # costs 3-4x more as query #2 than after 40 warm queries), and
-        # (b) queries sharing memoized subtrees attribute the build cost
-        # to the query that declares it, not whichever ran first. Queries
-        # with no prior record run last (first round: declaration order).
+        # (BENCH_FULL.json, committed), so C2/janino JIT warms on the
+        # cheap half instead of inflating the first heavy iterative/stream
+        # queries (measured: the identical closure query costs 3-4x more
+        # as query #2 than after 40 warm queries). Queries with no prior
+        # record run last, in declaration order.
         prior: dict[str, float] = {}
         full_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
@@ -171,154 +154,11 @@ def main() -> None:
         order = sorted(
             QUERIES, key=lambda n: (n not in prior, prior.get(n, 0.0))
         )
-        # Queries sharing a session-memoized subtree must keep a FIXED
-        # builder->rider execution order, or the build cost flips between
-        # them run-to-run as recorded priors shift (observed:
-        # q_sketch_distinct 3.9s<->10.5s depending on whether
-        # q_trimmed_stats had already materialized the shared percentile
-        # counts). The declared BUILDER absorbs the materialization; the
-        # rider records the memo-hit — stable attribution across rounds.
-        # r7 note on the percentile family (trimmed/sketch/histogram/
-        # range-layout, ~+3s total vs the r6 records): the r6 numbers
-        # were FLATTERED by the unbounded cache accumulation the r6
-        # advisor flagged — every percentile query's persisted counts
-        # stayed alive for the whole session (CacheManager holds refs;
-        # the periodic System.gc() below cannot reclaim them), so
-        # later family members and suspect-retries hit Spark's
-        # plan-matching cache for free. exact_percentiles now releases
-        # the previous call's state (bounded memory, ADVICE r6); the
-        # legitimate cross-query reuses are explicit memos exempt from
-        # release (_flag_price_counts; r7 adds _global_price_counts for
-        # the equidepth/range-layout pair, builder-pinned below). The
-        # residual is the honest one-build-per-table cost.
-        #
-        # r9 FINAL-ARTIFACT notes (the BENCH_FULL this repo ships: the
-        # end-of-round clean-box run, probe 1.55, 167 queries, 148.8s
-        # total = 0.89 s/query — the lowest per-query cost on record):
-        # - percentile family total 15.3s (percentiles 2.13 cold/1.09
-        #   re-time, weighted_median 1.57, trimmed_stats 3.70/2.00,
-        #   sketch_distinct 2.59, equidepth 3.42/1.61, range_layout
-        #   1.89) — at the r7-era 15s level the r8 verdict asked for,
-        #   with every builder's warm re-time recorded alongside
-        #   (builder_retime_sec).
-        # - the ELEVEN late-r9 queries sum to 9.9s:
-        #   q_bigram_greedy_decode 2.59 (12 recursive-CTE levels x
-        #   ~0.2s per-level job launch — data-INDEPENDENT iteration
-        #   overhead, steady 2.3-2.9s), q_bigram_loglik 2.01 (one
-        #   map-only corpus pass, 306-entry literal-map fold),
-        #   q_cdc_shared_chunks 1.88 (token hashes hoisted into a
-        #   let-bound int array: the naive per-position re-hash
-        #   measured ~3x slower), q_media_gif_anim 0.59,
-        #   q_recursive_month_spine 0.55 (after the carry-hi-in-the-
-        #   walk-row fix: referencing the bounds CTE from the
-        #   recursive term re-evaluated its orders aggregate EVERY
-        #   level — 13.8s measured, 80 scans; carried through it is
-        #   one scan), q_mixture_apply 0.47, q_mixture_weights 0.44,
-        #   q_snapshot_scan_pruned-style q_snapshot_scan_bloom 0.40
-        #   (includes its own snapshot write), q_denylist_scan 0.40
-        #   (Aho-Corasick walk, 0.55 steady standalone),
-        #   q_compression_signal 0.37, q_domain_caps 0.17.
-        # - sticky-slot evidence for the r10 bimodal-build item: in the
-        #   middle r9 full run q_ann_pq_search recorded 4.49s cold AND
-        #   >=4.5s on its immediate retry at one session position,
-        #   while standalone and the other full runs sit at 1.2-1.7s —
-        #   the contamination is the SLOT's heap (neighbors'
-        #   ContextCleaner-eligible blocks), not the plan. The retry
-        #   net and the builder re-times now System.gc() before
-        #   measuring (see _release_blocks), which keeps pq at its
-        #   1.2-1.7s steady level in the shipped run (1.17 recorded).
-        #
-        # r9 mid-round notes (against the mid-round artifact, probe
-        # 1.51; kept for the round's narrative):
-        # - percentile family, the r8 verdict's "What's wrong" #3: the
-        #   recorded 25.7s family (percentiles 11.60s) had TWO causes,
-        #   both now addressed and both visible in the artifact.
-        #   (1) Structural: the generated-class cache (default 100
-        #   entries) was being thrashed by the 150+-query session —
-        #   every family member re-paid a multi-second compile that an
-        #   isolated run never sees; the maxEntries=5000 session conf
-        #   above cut the family's first-touch sum ~50s -> ~20-26s
-        #   across repeated full runs (traced per-query). The two warm
-        #   blocks (unweighted + weighted rank shapes) cover the first
-        #   compile itself. The mid-round artifact records percentiles
-        #   1.94, weighted_median 1.37, sketch_distinct 2.27, equidepth
-        #   4.15, range_layout 2.94.
-        #   (2) Residual and HONESTLY UNRESOLVED: a one-time 6-25s cost
-        #   lands on one or two family members per run at a
-        #   run-dependent position (observed across four full runs:
-        #   trimmed_stats 28.5/13.3/4.0, weighted_median 14.5/8.4)
-        #   and is NOT removed by any warm; immediate re-times are
-        #   1.1-2.4s. Riders are caught by the suspect-retry net;
-        #   BUILDERS are retry-exempt by design, so mechanism (b) from
-        #   the verdict's menu now records each builder's warm re-time
-        #   ALONGSIDE the cold number (builder_retime_sec in the
-        #   payload) — the mid-round artifact shows trimmed_stats 13.27
-        #   cold / 2.41 re-time rather than claiming steady state in
-        #   prose. Root-causing the bimodal build slot (persist/GC
-        #   contention is the suspect) is an explicit r10 item.
-        # - q_media_mp4_meta (r8 verdict #4, 2.84s recorded vs ~1.45
-        #   preview): deliberate re-timing at sf0.1 measures 2.69s
-        #   first-touch then 1.77/1.70 steady — the recorded 2.84 was
-        #   first-touch (no prior record = ran last, cold block). The
-        #   mid-round artifact records 1.29s with a warm-middle slot.
-        # - the TEN mid-round r9 queries sum to 9.7s in that artifact:
-        #   q_ann_ivfpq_search 1.69, q_cms_join_size 1.47,
-        #   q_snapshot_scan_pruned 1.35 (includes its own snapshot
-        #   write), q_ann_pq_search 1.18 (after the r9 plan fixes:
-        #   single-reference zip_with ADC fold — CollapseProject was
-        #   re-evaluating the encode per subspace — plus SQL-string
-        #   literals cutting ~1.4s of py4j plan-construction chatter;
-        #   12s -> ~1.2s), q_unigram_segment 1.10, q_quality_gate_text
-        #   0.76, q_bpe_segment 0.71 (the Zipf distinct-word memo: the
-        #   merge loop runs per VOCABULARY entry, 3.4s -> 0.7s),
-        #   q_cms_frequencies 0.66, q_unigram_seed_vocab 0.51,
-        #   q_quality_logistic 0.29.
-        #
-        # r8 note on q_grouping_sets (r7 verdict ask #6, the one
-        # unexplained common-query delta): deliberate warm re-timing at
-        # sf0.1 measures 1.72s first touch then 0.90/0.92/0.78/0.77 —
-        # steady state AT the 0.73s record, no plan change. The r7
-        # 1.29s was first-touch cost (temp-view registration + SQL
-        # parse) that survived min-of-two because both samples run
-        # back-to-back at the same session position; attribution, not
-        # regression.
-        #
-        # r7 note on the cluster-family total (r6 verdict ask #4): the
-        # 9.2s r6 vs 6.9s r5 delta is ATTRIBUTION, not a regression —
-        # deliberate warm re-timing shows steady state clusters 0.03s
-        # (memo hit), survivors 0.5s, corpus_survivors ~3.4s (its OWN
-        # filter->pair->closure plan, unchanged in r6), embedding_dup
-        # ~1.9s; the ~4.5s one-time _corpus_clusters build now lands on
-        # the declared builder instead of whichever family member ran
-        # first in r5's ordering.
-        for builder, rider in [
-            ("q_trimmed_stats", "q_sketch_distinct"),   # _flag_price_counts
-            ("q_dedup_clusters", "q_dedup_survivors"),  # _corpus_clusters
-            ("q_dedup_clusters", "q_split_leakage_safe"),  # _corpus_clusters
-            # _global_price_counts (r7: the equidepth/range-layout pair's
-            # cut points rank the same memoized global price counts)
-            ("q_histogram_equidepth", "q_range_layout_stats"),
-            # _flag_qty_counts (r8, verdict ask #4: one distinct-
-            # (flag, quantity) aggregate carries both the row counts and
-            # the revenue-cents weight sums)
-            ("q_percentiles_exact", "q_weighted_median"),
-        ]:
-            bi, ri = order.index(builder), order.index(rider)
-            if bi > ri:
-                order.insert(ri, order.pop(bi))
 
-        # Named memo-builder rows (r15, r14 verdict ask #7): the four
-        # explicit cross-query memo builds used to land on whichever
-        # family member ran first, so builders' COLD numbers whipsawed
-        # with execution order (r14: q_dedup_clusters 7.64s driver cold
-        # vs 2.2s steady). Each build now runs as its OWN timed row,
-        # inserted immediately before the family's first member — the
-        # cost is still paid once per invocation from the parquet
-        # inputs (nothing persists across runs); it is just attributed
-        # to a named row. ADDITIVE only: no query row is removed or
-        # renamed, and the declared queries compute what they did.
-        from asterlake.queries import MEMO_BUILDERS
-
+        # Each cross-query memo build runs as its OWN timed row, inserted
+        # right before the family's first rider: the one-time build cost
+        # is attributed to a named row instead of whichever rider runs
+        # first, and every rider records a memo hit.
         for _mname, (_fn, _riders) in MEMO_BUILDERS.items():
             _idxs = [order.index(r) for r in _riders if r in order]
             order.insert(min(_idxs) if _idxs else len(order), _mname)
@@ -341,36 +181,43 @@ def main() -> None:
                 print(f"[trace] {name}: {sec}", file=sys.stderr, flush=True)
             return sec
 
+        def rebuild(name: str) -> float:
+            # a memo row re-run must re-execute the build, not record
+            # the memo hit the cold run left behind; the other memos
+            # stay warm, so a rider re-run still records a memo hit
+            # like its cold run did
+            if name in MEMO_BUILDERS:
+                clear_query_memos(name)
+            return run_one(name)
+
+        def _release_blocks() -> None:
+            # release ContextCleaner-eligible cache/checkpoint blocks left
+            # by iterative queries: the cleaner acts on JVM GC, which a
+            # long session otherwise defers until block-manager pressure
+            # lands on whichever query runs next
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+
         # Box-speed probe: the warmed flagship plan is a fixed workload,
         # so its median time is a pure box/JVM-speed sample. Recorded at
-        # the start AND end of the timed block, it lets round-over-round
-        # comparisons separate "the box was 20% slower that day" from
-        # "a plan regressed" (r4->r5 showed a 19% whole-suite drift with
-        # zero plan changes on the drifted queries).
+        # the start AND end of the timed block, it separates "the box was
+        # slower that day" from "a plan regressed".
         def probe() -> float:
             return sorted(
                 run_one("flagship_revenue_by_nation") for _ in range(3)
             )[1]
 
         probe_start = probe()
-        # Interleaved box-speed samples (r11 verdict ask #2): two
-        # same-code r11 runs differed 32% with the start/end probes
-        # moving the OPPOSITE direction — a 194-query ~5-minute session
-        # drifts WITHIN the timed block, and two endpoint samples cannot
-        # localize that. A probe every ~50 queries records the drift
-        # curve itself, so a round-over-round delta can be attributed to
-        # the session segment it happened in instead of to the plans.
+        # A long session drifts WITHIN the timed block, which two
+        # endpoint samples cannot localize; a probe every ~50 queries
+        # records the drift curve itself.
         probe_mid: list[float] = []
 
         # Sub-second queries swing up to 6x run-to-run from JIT/GC timing
-        # alone (round-4: q_string_functions 0.19s->1.27s with an
-        # identical plan), which is larger than any real plan change at
-        # that scale. Queries that finish under this threshold get a
-        # second timed run and record the min — two samples bound the
-        # one-off-spike error, and the ~0.3s x ~50 queries of extra wall
-        # time is noise against the heavy tail. Queries >= 1s keep single
-        # runs (their relative variance is small; re-running the memoized
-        # closure builder would record the memo hit, not the build).
+        # alone, which is larger than any real plan change at that
+        # scale. Queries that finish under this threshold get a second
+        # timed run and record the min. Queries >= 1s keep single runs
+        # (their relative variance is small).
         rerun_below_sec = 1.0
         timings: dict[str, float] = {}
         for i, name in enumerate(order):
@@ -380,183 +227,67 @@ def main() -> None:
             if timings[name] < rerun_below_sec and name not in MEMO_BUILDERS:
                 timings[name] = min(timings[name], run_one(name))
             if (i + 1) % 20 == 0:
-                # release ContextCleaner-eligible cache/checkpoint blocks
-                # left by iterative queries: the cleaner acts on JVM GC,
-                # which a 130-query session otherwise defers until block-
-                # manager pressure lands on whichever query runs next
-                import gc
-
-                gc.collect()
-                spark.sparkContext._jvm.System.gc()
+                _release_blocks()
             if (i + 1) % 50 == 0 and (i + 1) < len(order):
                 probe_mid.append(probe())
 
         # De-noise: a shared box throws occasional multi-second GC/CPU
-        # spikes that land on one arbitrary query (observed: a 0.3s query
-        # recorded at 14s once; r5: a 2.5s query recorded at 5.2s slipped
-        # the old >3x-only net). Any query >=1.5x its last record gets ONE
-        # warm re-run; keep the min. For queries whose prior record is
-        # >=1.5s the net tightens to >=1.3x — at that duration relative
-        # variance is small enough that a 1.3x jump is already suspect
-        # (r6: q_embedding_block_neighbors drifted 1.43x on pure noise
-        # and slipped the 1.5x-only net; deliberate re-timing showed it
-        # back at its prior level). Bounded at 12 retries so a genuinely
-        # slower build still shows up slower. Memo-subtree BUILDERS are
-        # exempt: their re-run would record the rider-side memo hit, not
-        # the build they are declared to absorb.
-        # (q_histogram_equidepth and q_percentiles_exact joined r7/r8:
-        # any declared memo builder's retry would record the rider-side
-        # memo hit, flattering exactly the family the r7 verdict asked
-        # to watch)
-        _builders = {
-            "q_trimmed_stats",
-            "q_dedup_clusters",
-            "q_histogram_equidepth",
-            "q_percentiles_exact",
-            # the named memo-build rows (r15): a retry would record the
-            # rider-side memo hit, exactly like the declared builders
-            *MEMO_BUILDERS,
-        }
+        # spikes that land on one arbitrary query. Any query >=1.5x its
+        # last record (>=1.3x when that record is >=1.5s, where relative
+        # variance is smaller) gets ONE warm re-run; keep the min. Bounded
+        # at 12 retries so a genuinely slower build still shows up
+        # slower. Memo rows are exempt: their re-run would record the
+        # memo hit, not the build.
         suspects = [
             n
             for n in timings
             if n in prior
-            and n not in _builders
+            and n not in MEMO_BUILDERS
             and timings[n]
             > max(1.0, (1.3 if prior[n] >= 1.5 else 1.5) * prior[n])
         ]
+
         # Free ContextCleaner-eligible blocks BEFORE measuring retries:
         # a spike that survives its immediate retry is usually the
-        # NEIGHBORS' garbage (r9: q_ann_pq_search 4.49s cold AND on
-        # retry at one session position, 1.2-1.7s standalone and in the
-        # prior full run) — the retry exists to measure the query's
-        # steady state, so it must not inherit the slot's heap pressure.
-        def _release_blocks() -> None:
-            import gc
-
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-
+        # NEIGHBORS' garbage, and a retry exists to measure the query's
+        # steady state.
         if suspects:
             _release_blocks()
         for name in sorted(suspects, key=lambda n: -timings[n])[:12]:
             timings[name] = min(timings[name], run_one(name))
 
-        # Builders are exempt from the suspect-retry net (a retry would
-        # record the rider-side memo hit), which also means a one-off
-        # box/GC spike landing on a builder is recorded RAW with no
-        # visible attribution (r8 verdict "What's wrong" #3; observed
-        # again r9: q_trimmed_stats 4.0s <-> 28.5s across back-to-back
-        # runs with identical code). Mechanism (b) from that verdict's
-        # menu: each declared builder gets ONE warm re-time recorded
-        # ALONGSIDE (never replacing) its cold number, so readers can
-        # separate "the build got slower" from "the box hiccuped on
-        # this slot" without trusting prose.
+        # Warm re-times recorded ALONGSIDE (never replacing) the cold
+        # numbers, so a reader can separate "the build got slower" from
+        # "the box hiccuped on this slot": every memo row (retry-exempt
+        # above) plus the RETIME_SLOWEST slowest cold query rows, whose
+        # colds carry landing-zone builds and first-execution JIT.
         _release_blocks()  # retimes measure builds, not neighbors' heap
-        # q_pagerank_copurchase joins the retime list (r9 verdict ask
-        # #5): NOT a memo builder — it stays inside the suspect-retry
-        # net — but its 5-round loop shows the same cold-attribution
-        # scatter (9.23s driver / 7.70s builder / unchanged plan), so
-        # the artifact records its steady state alongside the cold
-        # number instead of leaving the gap to prose.
-        # q_dedup_ngram_prefix joins r11 (r10 verdict ask #5): the one
-        # >1s r10 regression (2.45 -> 3.71s) with UNTOUCHED code and no
-        # recorded steady state — one retime row settles scatter-vs-
-        # plan permanently.
-        #
-        # r11 note on the q_trimmed_stats cold/retime gap (r10 verdict
-        # ask #4, cold 3.69 vs retime 1.78 = 2.07x where ~1.5x was the
-        # target): phase-isolated at sf0.1 in a bench-conf session —
-        # the _flag_price_counts memo build alone runs 1.74s (scan +
-        # distinct-(flag,price) shuffle + persist), and cold-minus-
-        # retime tracks it (cold 3.4-4.0s vs steady 2.9s on the probe
-        # box). The residual is the REAL one-build-per-table cost the
-        # declared builder absorbs by design, not an uncovered compile
-        # class; no warm can remove executed work. A second structural
-        # fact bounds the whole family at this SF: the testdata
-        # parquet files are single-row-group, so every scan is at most
-        # ONE non-empty task regardless of maxPartitionBytes — the
-        # CPU-heavy fold projections run single-core here while their
-        # 100 TB shape is embarrassingly map-parallel.
-        # Memo-hit blind spot (r13 verdict ask #2): the explicit memo
-        # caches make any re-execution of a memoized query free, so a
-        # retime/cold-rerun sample taken with the memos warm measures
-        # the memo HIT (q_dedup_clusters "retimed" 0.02s vs 3.87s cold
-        # in r13), and the symmetric cold-outlier guard then
-        # "attributes" the honest one-time build cost as a box spike.
-        # Every retime and cold-rerun sample now clears the memos
-        # first, so the sample is a real re-execution of the build the
-        # cold number paid. (The recorded colds are long since taken by
-        # this point — clearing cannot disturb them.)
-        from asterlake.queries import clear_query_memos
 
         def retime(name: str) -> float:
-            # One retry on a large outlier (r11 verdict ask #2): the
-            # retime exists to be the trustworthy steady-state signal,
-            # yet r11's driver run recorded a 44.28s q_label_propagation
-            # retime against a 5.22s cold number — a GC/box spike landed
-            # on the retime slot itself and got written down as "steady
-            # state". If a retime exceeds 3x the query's recorded cold
-            # number, free cleaner-eligible blocks and re-run once,
-            # keeping the min: two large samples in a row are then a
-            # real slowdown, one is a hiccup.
-            clear_query_memos()
-            t = run_one(name)
+            # One retry on a large outlier: the retime is the steady-
+            # state signal, so a spike landing on the retime slot itself
+            # (>=3x the cold number) is re-run once, keeping the min.
+            t = rebuild(name)
             cold = timings.get(name)
             if cold is not None and t >= 3.0 * max(cold, 0.5):
                 _release_blocks()
-                clear_query_memos()
-                t = min(t, run_one(name))
+                t = min(t, rebuild(name))
             return t
 
+        slowest_cold = sorted(
+            (n for n in timings if n not in MEMO_BUILDERS),
+            key=lambda n: -timings[n],
+        )[:RETIME_SLOWEST]
         builder_retime = {
             name: retime(name)
-            for name in sorted(
-                _builders
-                | {
-                    "q_pagerank_copurchase",
-                    "q_dedup_ngram_prefix",
-                    # r11 iterative/multi-pass graph queries: their
-                    # cold numbers carry the landing-zone builds, the
-                    # retime records the steady state
-                    "q_graph_triangles",
-                    "q_label_propagation",
-                    # the kmeans-fit + cell-join + closure composition
-                    # is the most expensive query at sf0.1 (9.2s cold);
-                    # the retime separates its training build from the
-                    # steady dedup pass
-                    "q_dedup_semantic",
-                    # r12 multi-round / large-expression queries: the
-                    # kcore cold carries 6 localCheckpoint landings,
-                    # the OPQ cold carries the ~18KB expr parse +
-                    # whole-plan codegen — retimes record the steady
-                    # fold costs
-                    "q_kcore_decompose",
-                    "q_ann_opq_search",
-                    # r13 iterative graph query: 4 BFS rounds + the
-                    # symmetrized-edge localCheckpoint landing ride the
-                    # cold; the retime records the steady join cost
-                    "q_bfs_distances",
-                    # r14 convergence-exact k-core: ~10 probed rounds
-                    # at sf0.1, each landed — the cold carries the
-                    # whole landing chain's first-execution JIT, the
-                    # retime the steady convergence loop
-                    "q_kcore_exact",
-                }
-            )
+            for name in sorted({*MEMO_BUILDERS, *slowest_cold})
         }
 
-        # Symmetric cold-outlier guard (r12 verdict ask #3): the retime
-        # retry above catches a spike landing on the RETIME slot, but a
-        # spike landing on the COLD slot left the inflated cold in
-        # queries{} with only the adjacent mid-probe as attribution
-        # (r12 driver run: q_percentiles_exact 14.72s cold vs 5.69s
-        # retime — box spike, committed same-code run 2.60s). Any
-        # retimed query whose cold exceeds 3x its retime gets ONE
-        # paired re-run recorded ALONGSIDE the cold — never replacing
-        # it, so the cold column stays an honest record of what the
-        # session measured, and the artifact carries its own
-        # attribution instead of leaving it to prose.
+        # Symmetric cold-outlier guard: a spike landing on the COLD slot
+        # would otherwise stand unattributed. Any retimed row whose cold
+        # exceeds 3x its retime gets ONE paired re-run recorded
+        # ALONGSIDE the cold — never replacing it, so the cold column
+        # stays an honest record of what the session measured.
         cold_rerun: dict[str, float] = {}
         _stale_colds = [
             n
@@ -566,8 +297,7 @@ def main() -> None:
         if _stale_colds:
             _release_blocks()
             for name in sorted(_stale_colds):
-                clear_query_memos()  # real re-execution, not a memo hit
-                cold_rerun[name] = run_one(name)
+                cold_rerun[name] = rebuild(name)
 
         probe_end = probe()
         total = round(sum(timings.values()), 4)
@@ -582,27 +312,27 @@ def main() -> None:
             # round's totals by its probe to compare box-independently
             "probe_sec_start": probe_start,
             "probe_sec_end": probe_end,
-            # in-run drift curve: one sample per ~50 queries (ask #2)
+            # in-run drift curve: one sample per ~50 queries
             "probe_sec_mid": probe_mid,
             "probe_sec": round((probe_start + probe_end) / 2, 4),
-            # warm re-times for the retry-exempt memo builders — the
-            # steady-state companion to their recorded cold numbers
+            # warm re-times for the memo rows and the slowest cold rows —
+            # the steady-state companion to their recorded cold numbers
             "builder_retime_sec": builder_retime,
-            # paired re-runs for retimed queries whose cold exceeded 3x
-            # their retime (ask #3: the cold stays in queries{} — this
-            # is the attribution sample, not a replacement)
+            # paired re-runs for retimed rows whose cold exceeded 3x
+            # their retime (the cold stays in queries{} — this is the
+            # attribution sample, not a replacement)
             "cold_rerun_sec": cold_rerun,
         }
     finally:
         spark.stop()
-    # The driver stores only the last ~2000 chars of stdout; with 100+
+    # A consumer may keep only the last ~2000 chars of stdout; with 100+
     # queries the full timings dict alone exceeds that, truncating the JSON
-    # line's HEAD and making it unparseable (BENCH_r03 `parsed: null`).
-    # So: full payload goes to BENCH_FULL.json next to this script (also
-    # the cost record the next run's cheapest-first ordering reads), and
-    # the one stdout line carries the headline metric plus as many of the
-    # SLOWEST queries as fit a conservative budget — the tail the driver
-    # keeps is always a complete, parseable JSON document.
+    # line's HEAD and making it unparseable. So: full payload goes to
+    # BENCH_FULL.json next to this script (also the cost record the next
+    # run's cheapest-first ordering reads), and the one stdout line
+    # carries the headline metric plus as many of the SLOWEST queries as
+    # fit a conservative budget — the kept tail is always a complete,
+    # parseable JSON document.
     with open(full_path, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
 
