@@ -8,6 +8,9 @@ Reference quirks fixed:
   discovered wins. Spark reads the table *directory*, so views always see
   every batch.
 - ``SHOW TABLES`` / ``DESCRIBE`` / ad-hoc SQL (:66-84) map 1:1 onto Spark SQL.
+
+Views read with the declared ``GOLD_SCHEMAS``: registering a view runs no
+Spark job (no parquet footer inference).
 """
 
 from __future__ import annotations
@@ -16,7 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from asterlake.schemas import GOLD_TABLES
+from asterlake.schemas import GOLD_SCHEMAS, GOLD_TABLES
+from asterlake.sources.writers import path_exists
 
 
 def register_gold(spark: SparkSession, gold_root: str, tables=GOLD_TABLES) -> list[str]:
@@ -25,21 +29,11 @@ def register_gold(spark: SparkSession, gold_root: str, tables=GOLD_TABLES) -> li
     registered = []
     for name in tables:
         path = os.path.join(gold_root, name)
-        if not _exists(spark, path):
+        if not path_exists(spark, path):
             continue
-        spark.read.parquet(path).createOrReplaceTempView(name)
+        spark.read.schema(GOLD_SCHEMAS[name]).parquet(path).createOrReplaceTempView(name)
         registered.append(name)
     return registered
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    if "://" not in path:
-        return os.path.isdir(path) or os.path.isfile(path)
-    # object-store paths: let Hadoop answer
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
 
 
 def show_tables(spark: SparkSession) -> DataFrame:

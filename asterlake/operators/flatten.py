@@ -91,7 +91,15 @@ def flatten_feed(
         # .str[0] which yields NaN
         approach = F.get(F.col("asteroid.close_approach_data"), 0)
 
-    silver = exploded.select(
+    if processing_time is None:
+        ts = F.current_timestamp()
+        date = F.current_date()
+    else:
+        ts = F.lit(processing_time).cast("timestamp")
+        date = F.lit(processing_time.date()).cast("date")
+    bid = F.unix_timestamp() if batch_id is None else F.lit(batch_id).cast("long")
+
+    return exploded.select(
         F.col("asteroid.id").alias("asteroid_id"),
         F.col("asteroid.neo_reference_id").alias("neo_id"),
         F.col("asteroid.name").alias("asteroid_name"),
@@ -112,19 +120,8 @@ def flatten_feed(
         ),
         F.col("asteroid.nasa_jpl_url").alias("jpl_url"),
         *_approach_columns(approach),
-    )
-
-    if processing_time is None:
-        ts = F.current_timestamp()
-        date = F.current_date()
-    else:
-        ts = F.lit(processing_time).cast("timestamp")
-        date = F.lit(processing_time.date()).cast("date")
-    bid = F.unix_timestamp() if batch_id is None else F.lit(batch_id).cast("long")
-
-    return (
-        silver.withColumn("_processing_timestamp", ts)
-        .withColumn("_processing_date", date)
-        .withColumn("_source_system", F.lit(SOURCE_SYSTEM))
-        .withColumn("_etl_batch_id", bid)
+        ts.alias("_processing_timestamp"),
+        date.alias("_processing_date"),
+        F.lit(SOURCE_SYSTEM).alias("_source_system"),
+        bid.alias("_etl_batch_id"),
     )

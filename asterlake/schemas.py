@@ -135,9 +135,60 @@ SILVER_SCHEMA = T.StructType(
     ]
 )
 
-GOLD_TABLES = (
-    "dim_asteroid",
-    "dim_date",
-    "dim_celestial_body",
-    "fact_asteroid_approach",
-)
+
+def _silver(*names: str) -> list[T.StructField]:
+    return [SILVER_SCHEMA[n] for n in names]
+
+
+# Gold: the star schema operators/star.py writes (FIXTURES.md A3). Declared,
+# like silver, so reading a table back needs no parquet footer-inference job.
+GOLD_SCHEMAS = {
+    "dim_asteroid": T.StructType(
+        _silver(
+            "asteroid_id",
+            "neo_id",
+            "asteroid_name",
+            "magnitude",
+            "is_hazardous",
+            "is_sentry",
+            "diameter_min_km",
+            "diameter_max_km",
+            "diameter_min_m",
+            "diameter_max_m",
+            "jpl_url",
+        )
+    ),
+    "dim_date": T.StructType(
+        [
+            T.StructField("date_id", T.IntegerType()),
+            *_silver("approach_date"),
+            T.StructField("year", T.IntegerType()),
+            T.StructField("month", T.IntegerType()),
+            T.StructField("day", T.IntegerType()),
+            T.StructField("weekday", T.StringType()),
+        ]
+    ),
+    "dim_celestial_body": T.StructType(
+        [T.StructField("celestial_body_id", T.LongType()), *_silver("approaching_body")]
+    ),
+    "fact_asteroid_approach": T.StructType(
+        [
+            T.StructField("approach_event_id", T.LongType()),
+            *_silver("asteroid_id"),
+            T.StructField("date_id", T.IntegerType()),
+            T.StructField("celestial_body_id", T.LongType()),
+            *_silver(
+                "approach_datetime",
+                "velocity_km_s",
+                "velocity_km_h",
+                "miss_distance_km",
+                "miss_distance_au",
+                "miss_distance_lunar",
+                "_etl_batch_id",
+                "_processing_timestamp",
+            ),
+        ]
+    ),
+}
+
+GOLD_TABLES = tuple(GOLD_SCHEMAS)

@@ -17,8 +17,13 @@ Reference behaviors and their fixes (SURVEY.md §4, §7):
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from asterlake.schemas import SILVER_SCHEMA
 
 
 def write_silver(df: DataFrame, path: str) -> None:
@@ -33,18 +38,18 @@ def write_silver(df: DataFrame, path: str) -> None:
 
 
 def read_silver(spark: SparkSession, path: str, processing_date=None) -> DataFrame:
-    """Read silver; optional filter on the partition column.
+    """Read silver with its declared schema; optional filter on the
+    partition column.
 
     The reference reads the partition by literal path
     (``.../_processing_date={today}/``, src/etl/silver_to_gold.py:32) which
     silently drops the partition column from the schema. Filtering on the
     column instead gets identical I/O via Catalyst partition pruning and
-    keeps the schema complete.
+    keeps the schema complete. The declared ``SILVER_SCHEMA`` spares the
+    parquet footer-inference job an inferring read would launch.
     """
-    df = spark.read.parquet(path)
+    df = spark.read.schema(SILVER_SCHEMA).parquet(path)
     if processing_date is not None:
-        from pyspark.sql import functions as F
-
         df = df.filter(F.col("_processing_date") == F.lit(processing_date))
     return df
 
@@ -68,22 +73,34 @@ def merge_dimension(
     at 100 TB the real answer is Delta/Iceberg MERGE (jars not in this
     image — gated out, SURVEY §7.4).
     """
-    import shutil
-    import tempfile
-
-    try:
-        existing = spark.read.parquet(path)
-        merged = existing.unionByName(
-            incoming.join(existing, on=natural_key, how="left_anti")
-        )
-    except Exception:
-        merged = incoming
     tmp = tempfile.mkdtemp(prefix="asterlake_merge_")
-    out = os.path.join(tmp, "data")
-    merged.write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    back.write.mode("overwrite").parquet(path)
-    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        # only a missing dim starts from `incoming`: a read or merge error on
+        # an existing one (e.g. a schema mismatch) must raise, not overwrite
+        # the dim's history with the incoming batch alone
+        if path_exists(spark, path):
+            existing = spark.read.parquet(path)
+            merged = existing.unionByName(
+                incoming.join(existing, on=natural_key, how="left_anti")
+            )
+        else:
+            merged = incoming
+        out = os.path.join(tmp, "data")
+        merged.write.mode("overwrite").parquet(out)
+        spark.read.parquet(out).write.mode("overwrite").parquet(path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists, on the local filesystem or an object store."""
+    if "://" not in path:
+        return os.path.isdir(path) or os.path.isfile(path)
+    # object-store paths: let Hadoop answer
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(conf).exists(p)
 
 
 def write_bucketed(

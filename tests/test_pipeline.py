@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 
 from asterlake import catalog, pipeline
+from asterlake.schemas import GOLD_TABLES
 from asterlake.sources.bronze import write_bronze_document
 from asterlake.sources.neows import date_windows, fetch_feed, ingest_range
 from tests.fixtures_neows import N_ASTEROID_ROWS, N_DISTINCT_ASTEROIDS, feed_document
@@ -220,3 +221,69 @@ def test_neows_streaming_datasource_offline(spark, tmp_path):
 
     docs = [_json.loads(r.document) for r in rows]
     assert all(d == feed_document() for d in docs)
+
+
+# Spark jobs one fixture day run launches, as measured on this code: 1 for
+# the silver write, 8 for the four gold writes, 2 for the one counting
+# aggregation (its shuffle-map job and the collect).
+DAY_RUN_JOBS = 11
+
+
+def test_consecutive_days_count_cumulative_gold(spark, tmp_path):
+    """Two days into one lake: the returned counts are the batch's silver
+    partition and every gold table's cumulative rows, from one counting job."""
+    from pyspark.sql import functions as F
+
+    gold = tmp_path / "gold"
+    silver = tmp_path / "silver"
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    for day in range(2):
+        at = PROC_TIME + dt.timedelta(days=day)
+        bronze = tmp_path / f"bronze-{day}"
+        write_bronze_document(str(bronze), at.date().isoformat(), feed_document())
+        first_job = next_job()
+        counts = pipeline.run(
+            spark,
+            str(bronze),
+            str(silver),
+            str(gold),
+            batch_id=BATCH_ID + day,
+            processing_time=at,
+        )
+        if day == 0:
+            assert next_job() - first_job == DAY_RUN_JOBS
+        batch = spark.read.parquet(str(silver)).filter(
+            F.col("_processing_date") == F.lit(at.date())
+        )
+        want = {"silver": batch.count()}
+        for t in GOLD_TABLES:
+            want[t] = spark.read.parquet(str(gold / t)).count()
+        assert counts == want
+        assert counts["silver"] == N_ASTEROID_ROWS
+        assert counts["fact_asteroid_approach"] == (day + 1) * N_ASTEROID_ROWS
+
+
+def test_merge_dimension_refuses_incompatible_incoming(spark, tmp_path, monkeypatch):
+    """A merge that cannot read or union the existing dim raises and leaves
+    its files as they were, instead of overwriting history with the batch."""
+    import tempfile
+
+    from pyspark.errors import AnalysisException
+
+    from asterlake.sources.writers import merge_dimension
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    path = str(tmp_path / "dim")
+    merge_dimension(
+        spark, spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string"), path, "id"
+    )
+    before = sorted(spark.read.parquet(path).collect())
+    files = sorted(p.name for p in (tmp_path / "dim").iterdir())
+    incompatible = spark.createDataFrame([(3, 1.5)], "id long, score double")
+    with pytest.raises(AnalysisException):
+        merge_dimension(spark, incompatible, path, "id")
+    assert sorted(p.name for p in (tmp_path / "dim").iterdir()) == files
+    assert sorted(spark.read.parquet(path).collect()) == before
+    assert list(scratch.iterdir()) == []  # the merge's temp dirs are removed

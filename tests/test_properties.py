@@ -6,7 +6,7 @@ Invariants (SURVEY.md §5 "property-ish invariants"):
   all_approaches = one row per approach, min one per asteroid
 - tolerant casts: junk numerics null out, never raise
 - dims unique on natural key; fact row count == silver row count
-  (left joins never drop); every fact date FK resolves or is null
+  (left joins never drop); every fact date / body FK resolves or is null
 
 Spark round-trips per example are expensive: examples are few but each is
 a structurally random document (duplicate ids, empty approach lists,
@@ -22,7 +22,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from asterlake.operators.flatten import flatten_feed
-from asterlake.operators.star import build_star
+from asterlake.operators.star import build_fact, build_star
 from asterlake.schemas import BRONZE_FEED_SCHEMA
 from tests.fixtures_neows import _approach, _asteroid
 
@@ -144,6 +144,20 @@ def test_star_invariants(spark, doc):
         .count()
     )
     assert unresolved == 0
+
+    # every non-null fact celestial_body_id resolves in dim_celestial_body,
+    # and a null approaching_body gives a null FK
+    dim_b = star["dim_celestial_body"]
+    unresolved = (
+        fact.filter(F.col("celestial_body_id").isNotNull())
+        .join(dim_b, "celestial_body_id", "left_anti")
+        .count()
+    )
+    assert unresolved == 0
+    # the fact is a row-wise projection of silver, so its rows built from
+    # the null-body silver rows are exactly the fact's null-body rows
+    null_body_fact = build_fact(silver.filter(F.col("approaching_body").isNull()))
+    assert null_body_fact.filter(F.col("celestial_body_id").isNotNull()).count() == 0
     silver.unpersist()
 
 
