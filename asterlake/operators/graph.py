@@ -41,6 +41,8 @@ import warnings
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from asterlake.session import pinned_conf
+
 
 def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Both directions of every edge in ONE pass over the input (r15).
@@ -131,10 +133,7 @@ def connected_components(
     )
 
     spark = edges.sparkSession
-    sp_key = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(parts))
-    try:
+    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         for _ in range(max_iter):
             # each vertex's best neighbor label this round; the groupBy is
             # the round's single exchange (at `parts`, matching the pinned
@@ -177,8 +176,6 @@ def connected_components(
                 break
         else:
             _warn_not_converged("propagation", max_iter)
-    finally:
-        spark.conf.set(sp_key, prev_sp)
     return labels
 
 
@@ -410,11 +407,8 @@ def _pagerank_loop(
         f"(CAST({(damping_den - damping_num) * scale} AS BIGINT) "
         f"DIV {damping_den}) DIV _n"
     )
-    sp_key = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(parts))
     rounds = 0
-    try:
+    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         for _i in range(iters):
             # shuffle-hash hint: build a hash map of the node-sized rank
             # table per partition instead of sort-merge — co-partitioned
@@ -456,11 +450,11 @@ def _pagerank_loop(
             # SQL subplans canonicalize); checkpointing is semantics-
             # free, values identical. The FINAL round always lands so
             # the returned frame is materialized while the loop's
-            # shuffle-partition pin is still in force (the conf is
-            # restored in ``finally`` — an un-landed tail would execute
-            # later at the ambient conf). The convergence-gated variant
-            # (tol_fp set) keeps per-round landings: its delta probe is
-            # an action over BOTH pr and prev_pr every round.
+            # shuffle-partition pin is still in force (an un-landed
+            # tail would execute later at the ambient conf). The
+            # convergence-gated variant
+            # (tol_fp set) keeps per-round landings: its delta probe
+            # is an action over BOTH pr and prev_pr every round.
             if (
                 tol_fp is not None
                 or rounds % max(ckpt_every, 1) == 0
@@ -486,8 +480,6 @@ def _pagerank_loop(
                     "the un-converged ranks",
                     stacklevel=3,
                 )
-    finally:
-        spark.conf.set(sp_key, prev_sp)
     return pr.select(F.col("node"), F.col("pr").alias("pagerank_fp")), rounds
 
 
@@ -628,10 +620,7 @@ def label_propagation(
     """
     spark = edges.sparkSession
     parts = max(4, min(256, spark.sparkContext.defaultParallelism))
-    sp_key = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(parts))
-    try:
+    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         und = (
             _symmetrized(edges, src, dst)
             .filter(F.col("_s") != F.col("_d"))
@@ -668,8 +657,6 @@ def label_propagation(
                 .select("node", (-F.col("_m._nl")).alias("lab"))
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set(sp_key, prev_sp)
     return labels.select("node", F.col("lab").alias("community"))
 
 
@@ -739,9 +726,7 @@ def kcore_decomposition(
     exchange (was: one (node, h) exchange + one (node) exchange);
     (c) the loop pins ``spark.sql.shuffle.partitions`` to the
     parallelism-derived ``parts`` so low-core runs don't pay 32-way
-    task overhead per round — the pin is a SESSION-global conf
-    mutation (restored in ``finally``), so the loop assumes no other
-    query plans on the same session concurrently, and every round
+    task overhead per round (``pinned_conf``), and every round
     (including the last — the final round always lands, r15) executes
     under the pin. NOTE an explicit pre-partitioning of the
     edge landing is NOT kept: ``localCheckpoint`` does not preserve
@@ -755,10 +740,7 @@ def kcore_decomposition(
     round shape, where the shared exchange repeats 3x)."""
     spark = edges.sparkSession
     parts = max(4, min(256, spark.sparkContext.defaultParallelism))
-    sp_key = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(parts))
-    try:
+    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         und = (
             _symmetrized(edges, src, dst)
             .filter(F.col("_s") != F.col("_d"))
@@ -790,15 +772,13 @@ def kcore_decomposition(
             # The FINAL round lands too (r15, r14 ADVICE): the returned
             # frame must materialize while the loop's shuffle-partition
             # pin is still in force — an un-landed tail would execute
-            # after ``finally`` restores the conf, running the last
-            # rounds at the ambient partition count the pin exists to
-            # avoid (the pagerank_fixed_point discipline).
+            # after the pin is lifted, running the last rounds at the
+            # ambient partition count the pin exists to avoid (the
+            # pagerank_fixed_point discipline).
             if ckpt_every and (
                 (r + 1) % ckpt_every == 0 or r + 1 == rounds
             ):
                 vals = vals.localCheckpoint()
-    finally:
-        spark.conf.set(sp_key, prev_sp)
     return vals.select("node", F.col("h").alias("coreness"))
 
 

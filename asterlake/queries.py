@@ -39,13 +39,21 @@ aggregations, windows, set ops, semi/anti joins, rollup, pivot, top-k.
 from __future__ import annotations
 
 import functools
+import os
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from asterlake.tables import fan_out_small_scan, load_table
+from asterlake.session import pinned_conf
+from asterlake.tables import (
+    events_read_schema,
+    fan_out_small_scan,
+    load_table,
+    normalize_events_ts,
+)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -91,21 +99,100 @@ def _sum_fixed(cents: F.Column, scale: float) -> F.Column:
     """Exact sum of a long fixed-point column, as double in original units."""
     return F.sum(cents.cast("decimal(18,0)")).cast("double") / F.lit(scale)
 
-# Streaming drains: availableNow appends a trailing NO-DATA micro-batch
-# whenever the query is watermarked, solely to advance the watermark and
-# flush/evict state (measured at sf0.1: 0.7-2.7 s per drain for zero
-# input rows - a full incremental re-plan + per-partition state-store
-# load/commit). For sinks whose FINAL table cannot depend on that flush
-# - complete-mode sinks (every trigger re-emits full state), update-mode
-# custom state with GroupStateTimeout.NoTimeout (no data -> no changed
-# keys -> nothing emitted), and stateless/inner-join append sinks (no
-# new input -> no new rows) - the drain disables it via this conf and
-# restores the session value after. q_stream_ohlc_append KEEPS the flush
-# batch: append-mode window aggregation emits finalized windows only
-# when the watermark passes them, so its final batch IS load-bearing
-# (verified: skipping it drops rows there, and ONLY there; every other
-# drain was verified row-identical at sf0.1 on top of the oracle gate).
-_NDB_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+def _stream_source(
+    spark: SparkSession, sf_dir: str, table: str, workdir: str, copies: int = 1
+) -> Callable[[], DataFrame]:
+    """Expose ``<sf_dir>/<table>.parquet`` to the file-stream source.
+
+    The file source reads a *directory*, so the file is symlinked into
+    ``<workdir>/<table>`` ``copies`` times, without copying data. Returns
+    a reader that opens a new stream there with the schema a batch read
+    observes (file streams require an explicit one); events get their
+    ``ts`` normalized as :func:`load_table` does."""
+    src_dir = os.path.join(workdir, table)
+    os.makedirs(src_dir)
+    for i in range(copies):
+        os.symlink(
+            os.path.join(sf_dir, f"{table}.parquet"),
+            os.path.join(src_dir, f"{table}_{i}.parquet"),
+        )
+    if table == "events":
+        schema = events_read_schema(spark, sf_dir)
+        return lambda: normalize_events_ts(
+            spark.readStream.schema(schema).parquet(src_dir)
+        )
+    schema = load_table(spark, sf_dir, table).schema
+    return lambda: spark.readStream.schema(schema).parquet(src_dir)
+
+
+def _drain(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    build: Callable[[Callable[[], DataFrame]], DataFrame],
+    name: str,
+    mode: str,
+    *,
+    partitions: int = 4,
+    flush: bool = False,
+    copies: int = 1,
+) -> DataFrame:
+    """Replay ``table`` as a file stream through ``build`` into the memory
+    sink ``name`` (``mode`` output, one availableNow run to completion)
+    and return the sink's table.
+
+    ``build`` gets the :func:`_stream_source` reader and returns the
+    streaming frame to drain. The run is pinned (:func:`pinned_conf`) to
+    ``partitions`` shuffle partitions: a stateful stream fixes one state
+    store (plus its per-batch checkpoint deltas) per shuffle partition at
+    first run, so it is sized to the aggregate's key cardinality, not the
+    scan-sized session default (measured 3.0 s -> 1.0 s at sf0.1 for
+    q_stream_windowed_counts).
+
+    ``flush`` keeps the trailing no-data micro-batch that availableNow
+    appends to a watermarked query solely to advance the watermark and
+    flush or evict state. It costs 0.7-2.7 s per drain at sf0.1 for zero
+    input rows (a full incremental re-plan plus a state-store load and
+    commit per partition). A sink's final table cannot depend on it when
+    the sink is complete-mode (every trigger re-emits full state), update-
+    mode custom state with ``GroupStateTimeout.NoTimeout`` (no data, no
+    changed keys, nothing emitted), or a stateless or inner-join append
+    (no new input, no new rows); those drains skip it. Append-mode window
+    aggregation emits a finalized window only once the watermark passes
+    it, so there the flush batch is load-bearing: skipping it drops rows
+    in q_stream_ohlc_append, and only there (every other drain was
+    verified row-identical at sf0.1 on top of the oracle gate)."""
+    with tempfile.TemporaryDirectory() as workdir:
+        out = build(_stream_source(spark, sf_dir, table, workdir, copies))
+        with pinned_conf(
+            spark,
+            {
+                "spark.sql.shuffle.partitions": str(partitions),
+                "spark.sql.streaming.noDataMicroBatches.enabled": (
+                    "true" if flush else "false"
+                ),
+            },
+        ):
+            (
+                out.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+    return spark.table(name)
+
+
+def _pandas_state_partitions(spark: SparkSession) -> int:
+    """Drain parallelism for applyInPandasWithState: each partition is
+    one Python-worker state fold, so unlike the JVM-stateful drains
+    (fixed at 4) it scales with cores. Measured at sf0.1: 4 parts 4.17 s,
+    8 parts 2.59 s, 32 parts regresses (results identical; the
+    state-store count stays bounded)."""
+    return max(4, min(16, spark.sparkContext.defaultParallelism // 4))
 
 
 # ---------------------------------------------------------------------------
@@ -1621,23 +1708,12 @@ def q_stream_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + projection), so the drained stream must equal the batch
     linkage EXACTLY — gated by the same oracle. Append-mode memory
     sink, availableNow replay."""
-    import os
-    import tempfile
-
     from asterlake.operators.linkage import blocked_candidates, fs_link
 
-    cust_batch = load_table(spark, sf_dir, "customer")
-    left_static, _ = _linkage_sides(cust_batch)
-    schema = cust_batch.schema
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "customer")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "customer.parquet"),
-            os.path.join(src_dir, "customer.parquet"),
-        )
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        _, right_stream = _linkage_sides(stream)
+    left_static, _ = _linkage_sides(load_table(spark, sf_dir, "customer"))
+
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
+        _, right_stream = _linkage_sides(read())
         # Fan the STREAM side before scoring (r15, r14 verdict ask #8):
         # profiling showed the drain's ~3s steady cost is addBatch
         # execution (planning is ~0.2s) — the micro-batch file scan is
@@ -1656,33 +1732,15 @@ def q_stream_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = fs_link(
             cand, _linkage_rules(), upper_micros=2500000, lower_micros=0
         )
-        out = scored.filter(F.col("weight_micros") >= 0).select(
+        return scored.filter(F.col("weight_micros") >= 0).select(
             F.col("cust_id_l").alias("cust_id"),
             F.col("rec_id_r").alias("rec_id"),
             "weight_micros",
             "decision",
         )
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # stateless append join: no state to flush (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                out.writeStream.format("memory")
-                .queryName("stream_linkage")
-                .outputMode("append")
-                .option(
-                    "checkpointLocation", os.path.join(workdir, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return spark.table("stream_linkage")
+
+    # stateless append join: no state to flush
+    return _drain(spark, sf_dir, "customer", build, "stream_linkage", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -2986,51 +3044,27 @@ def q_stream_frequent(spark: SparkSession, sf_dir: str) -> DataFrame:
     trims only lower counts) — tests/test_streaming.py pins the
     cross-micro-batch state survival and checkpoint restart this
     single-drain query doesn't exercise."""
-    import os
-    import tempfile
-
     from asterlake.operators.textstats import whitespace_tokens
     from asterlake.streaming.pipeline import streaming_frequent_candidates
 
-    schema = load_table(spark, sf_dir, "documents").schema
     denom = 100
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "documents")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "documents.parquet"),
-            os.path.join(src_dir, "documents.parquet"),
-        )
-        stream_toks = (
-            spark.readStream.schema(schema)
-            .parquet(src_dir)
-            .select(F.explode(whitespace_tokens("text")).alias("token"))
-        )
-        cands = streaming_frequent_candidates(
-            stream_toks, denom=denom, n_shards=8
-        )
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # update + NoTimeout MG state: flush emits no changed keys (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                cands.writeStream.format("memory")
-                .queryName("stream_frequent_sink")
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
+    # update + NoTimeout MG state: the flush emits no changed keys
+    sink = _drain(
+        spark,
+        sf_dir,
+        "documents",
+        lambda read: streaming_frequent_candidates(
+            read().select(F.explode(whitespace_tokens("text")).alias("token")),
+            denom=denom,
+            n_shards=8,
+        ),
+        "stream_frequent_sink",
+        "update",
+        partitions=8,
+    )
     w_shard = Window.partitionBy("shard")
     final_cands = (
-        spark.table("stream_frequent_sink")
-        .withColumn("_mx", F.max("n_shard_total").over(w_shard))
+        sink.withColumn("_mx", F.max("n_shard_total").over(w_shard))
         .where(F.col("n_shard_total") == F.col("_mx"))
         .select("token")
         .distinct()
@@ -3320,56 +3354,20 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably identical to the batch GROUP BY — same oracle as a batch
     window query, which is the strongest correctness check a stream can
     get."""
-    import os
-    import tempfile
-
     from asterlake.streaming.pipeline import windowed_event_counts
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    # file streams require an explicit schema; use the one the batch read
-    # observes so the stream sees whatever physical ts encoding exists
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        # the file stream source requires a *directory*; expose the single
-        # parquet file through a symlink without copying data
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src_dir, "events.parquet"),
-        )
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema).parquet(src_dir)
-        )
-        counts = windowed_event_counts(
-            stream, window="1 hour", watermark="30 minutes",
+    # complete mode re-emits full state every trigger
+    return _drain(
+        spark,
+        sf_dir,
+        "events",
+        lambda read: windowed_event_counts(
+            read(), window="1 hour", watermark="30 minutes",
             group_cols=["event_type"],
-        )
-        # A stateful stream materializes one state-store instance (+ its
-        # checkpoint delta files per micro-batch) PER shuffle partition,
-        # fixed at first run. Size it to the aggregate's key cardinality
-        # (windows x event types — thousands of rows), not the scan-sized
-        # session default: 32 stores for a tiny agg is pure fixed overhead
-        # (measured 3.0s -> 1.0s at sf0.1).
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # complete mode re-emits full state every trigger (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                counts.writeStream.format("memory")
-                .queryName("stream_windowed_counts")
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return spark.table("stream_windowed_counts")
+        ),
+        "stream_windowed_counts",
+        "complete",
+    )
 
 
 @query(
@@ -4088,31 +4086,14 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-exact). State is bounded by the watermark + interval condition;
     shuffle partitions sized to key cardinality around start() (state
     stores are per-partition, fixed at first run)."""
-    import os
-    import tempfile
-
     from asterlake.streaming.pipeline import stream_stream_interval_join
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src_dir, "events.parquet"),
-        )
-
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
         def side(event_type: str, cols: list[str]) -> DataFrame:
-            return (
-                normalize_events_ts(
-                    spark.readStream.schema(schema).parquet(src_dir)
-                )
-                .filter(F.col("event_type") == event_type)
-                .select(*cols)
-            )
+            stream = read().filter(F.col("event_type") == event_type)
+            return stream.select(*cols)
 
-        joined = stream_stream_interval_join(
+        return stream_stream_interval_join(
             side("error", ["event_id", "user_id", "ts"]),
             side("click", ["event_id", "user_id", "ts", "value"]),
             key="user_id",
@@ -4125,25 +4106,11 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r_ts").alias("clk_ts"),
             F.col("r_value").alias("clk_value"),
         )
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # append inner join: no new input, no new matches (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                joined.writeStream.format("memory")
-                .queryName("stream_interval_join")
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return spark.table("stream_interval_join")
+
+    # append inner join: no new input, no new matches
+    return _drain(
+        spark, sf_dir, "events", build, "stream_interval_join", "append"
+    )
 
 
 @query(
@@ -5448,55 +5415,22 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the micro-batch split was — the strongest correctness form a custom
     stateful op can get (exact totals, not just run-to-completion).
     Cross-batch state survival itself is pinned by test_streaming.py."""
-    import os
-    import tempfile
-
     from asterlake.streaming.pipeline import running_user_counts
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src_dir, "events.parquet"),
+    # update + NoTimeout custom state: the flush emits no changed keys
+    return (
+        _drain(
+            spark,
+            sf_dir,
+            "events",
+            lambda read: running_user_counts(read()),
+            "stream_stateful_counts",
+            "update",
+            partitions=_pandas_state_partitions(spark),
         )
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema).parquet(src_dir)
-        )
-        counts = running_user_counts(stream)
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        # applyInPandasWithState parallelism: each partition is one
-        # Python-worker state fold, so unlike the JVM-stateful drains
-        # (fixed at 4) this one scales with cores — measured at sf0.1:
-        # 4 parts 4.17s / 8 parts 2.59s / 32 parts regresses (results
-        # identical; state-store count still bounded)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(4, min(16, spark.sparkContext.defaultParallelism // 4))),
-        )
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # update + NoTimeout custom state (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                counts.writeStream.format("memory")
-                .queryName("stream_stateful_counts")
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return (
-            spark.table("stream_stateful_counts")
-            .groupBy("user_id")
-            .agg(F.max("n_events_total").cast("bigint").alias("n_events_total"))
-        )
+        .groupBy("user_id")
+        .agg(F.max("n_events_total").cast("bigint").alias("n_events_total"))
+    )
 
 
 @query(
@@ -5616,46 +5550,20 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds the dataset's time span so no key is forgotten mid-replay
     (state bounding is the production story; exactness is the gate
     here)."""
-    import os
-    import tempfile
-
     from asterlake.streaming.pipeline import watermarked_dedup
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        for copy in ("a", "b"):
-            os.symlink(
-                os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src_dir, f"events_{copy}.parquet"),
-            )
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema).parquet(src_dir)
-        )
-        deduped = watermarked_dedup(
-            stream, ["event_id"], event_col="ts", delay="60 days"
-        ).select("event_id", "ts", "user_id", "event_type", "value", "props")
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # append dropDuplicates emits rows only on arrival (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                deduped.writeStream.format("memory")
-                .queryName("stream_dedup")
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return spark.table("stream_dedup")
+    # append dropDuplicates emits rows only on arrival
+    return _drain(
+        spark,
+        sf_dir,
+        "events",
+        lambda read: watermarked_dedup(
+            read(), ["event_id"], event_col="ts", delay="60 days"
+        ).select("event_id", "ts", "user_id", "event_type", "value", "props"),
+        "stream_dedup",
+        "append",
+        copies=2,
+    )
 
 
 @query(
@@ -5866,50 +5774,29 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 5.9e-4 from the 49.0 threshold at all test SFs (verified), so
     double partial-sum ordering (~1e-12 relative) can never flip a
     tier between engines."""
-    import os
-    import tempfile
-
-    from asterlake.tables import events_read_schema, load_table, normalize_events_ts
-
-    ev_batch = load_table(spark, sf_dir, "events")
-    profile = ev_batch.groupBy("user_id").agg(
-        F.when(F.avg("value") >= 49.0, "high").otherwise("low").alias("tier")
+    profile = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("user_id")
+        .agg(
+            F.when(F.avg("value") >= 49.0, "high")
+            .otherwise("low")
+            .alias("tier")
+        )
     )
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src_dir, "events.parquet"),
-        )
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema).parquet(src_dir)
-        )
-        joined = (
-            stream.join(F.broadcast(profile), "user_id")
+    # complete-mode agg over a stateless stream-static join
+    return _drain(
+        spark,
+        sf_dir,
+        "events",
+        lambda read: (
+            read()
+            .join(F.broadcast(profile), "user_id")
             .groupBy("tier", "event_type")
             .agg(F.count("*").cast("bigint").alias("n_events"))
-        )
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # complete-mode agg over a stateless stream-static join (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                joined.writeStream.format("memory")
-                .queryName("stream_static_join")
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return spark.table("stream_static_join")
+        ),
+        "stream_static_join",
+        "complete",
+    )
 
 
 @query(
@@ -5973,45 +5860,19 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and the oracle's lag/cumsum derivation) produces. Completes the
     §2.7 set: tumbling windows, dedup, custom-state sessions, and now
     built-in session windows all gated stream-vs-batch."""
-    import os
-    import tempfile
-
     from asterlake.streaming.pipeline import session_window_counts
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src_dir, "events.parquet"),
-        )
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema).parquet(src_dir)
-        )
-        sessions = session_window_counts(
-            stream, gap="30 minutes", group_cols=["user_id"]
-        ).select("user_id", "session_start", "session_end", "n_events")
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # complete-mode session agg: emission is full state (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                sessions.writeStream.format("memory")
-                .queryName("stream_session_window")
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return spark.table("stream_session_window")
+    # complete-mode session agg: emission is full state
+    return _drain(
+        spark,
+        sf_dir,
+        "events",
+        lambda read: session_window_counts(
+            read(), gap="30 minutes", group_cols=["user_id"]
+        ).select("user_id", "session_start", "session_end", "n_events"),
+        "stream_session_window",
+        "complete",
+    )
 
 
 # ===========================================================================
@@ -6927,14 +6788,10 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-memory frame. Rule names sort deterministically, so the joined
     violation string is stable."""
     import atexit
-    import os
     import shutil
-    import tempfile
 
     from asterlake.streaming.pipeline import stream_quarantine
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    schema = events_read_schema(spark, sf_dir)
     # mkdtemp (not TemporaryDirectory): the returned DataFrame reads the
     # BAD sink lazily, so the sink must outlive this function — no
     # collect()+createDataFrame round trip through the driver (the
@@ -6945,15 +6802,7 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs don't accumulate data-sized tmp (ADVICE r6).
     workdir = tempfile.mkdtemp(prefix="asterlake-quarantine-")
     atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    src_dir = os.path.join(workdir, "events")
-    os.makedirs(src_dir)
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema).parquet(src_dir)
-    )
+    stream = _stream_source(spark, sf_dir, "events", workdir)()
     good = os.path.join(workdir, "good")
     bad = os.path.join(workdir, "bad")
     stream_quarantine(
@@ -7698,58 +7547,25 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     final row per user (max_by n_events) must equal the LAST value of
     the batch EWMA recursion bit-for-bit — the oracle replays the full
     per-user prefix recursion and keeps its last row."""
-    import os
-    import tempfile
-
     from asterlake.streaming.pipeline import running_ewma
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src_dir, "events.parquet"),
+    # update + NoTimeout custom state: the flush emits no changed keys
+    return (
+        _drain(
+            spark,
+            sf_dir,
+            "events",
+            lambda read: running_ewma(read(), alpha=0.1),
+            "stream_ewma",
+            "update",
+            partitions=_pandas_state_partitions(spark),
         )
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema).parquet(src_dir)
+        .groupBy("user_id")
+        .agg(
+            F.max("n_events").cast("bigint").alias("n_events"),
+            F.expr("max_by(ewma, n_events)").alias("ewma"),
         )
-        ew = running_ewma(stream, alpha=0.1)
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        # applyInPandasWithState parallelism: each partition is one
-        # Python-worker state fold, so unlike the JVM-stateful drains
-        # (fixed at 4) this one scales with cores — measured at sf0.1:
-        # 4 parts 4.17s / 8 parts 2.59s / 32 parts regresses (results
-        # identical; state-store count still bounded)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(4, min(16, spark.sparkContext.defaultParallelism // 4))),
-        )
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # update + NoTimeout custom state (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                ew.writeStream.format("memory")
-                .queryName("stream_ewma")
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return (
-            spark.table("stream_ewma")
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").cast("bigint").alias("n_events"),
-                F.expr("max_by(ewma, n_events)").alias("ewma"),
-            )
-        )
+    )
 
 
 @query(
@@ -8105,45 +7921,17 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch bars EXACTLY — gated by the same oracle.
     Struct min/max are order-insensitive merges, so any micro-batch
     split produces the identical result."""
-    import os
-    import tempfile
-
     from asterlake.operators.timeseries import ohlc_bars
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src_dir, "events.parquet"),
-        )
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema).parquet(src_dir)
-        )
-        bars = ohlc_bars(stream)
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        prev_ndb = spark.conf.get(_NDB_KEY, "true")
-        # complete mode re-emits full state every trigger (see _NDB_KEY note)
-        spark.conf.set(_NDB_KEY, "false")
-        try:
-            (
-                bars.writeStream.format("memory")
-                .queryName("stream_ohlc")
-                .outputMode("complete")
-                .option(
-                    "checkpointLocation", os.path.join(workdir, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            spark.conf.set(_NDB_KEY, prev_ndb)
-        return spark.table("stream_ohlc")
+    # complete mode re-emits full state every trigger
+    return _drain(
+        spark,
+        sf_dir,
+        "events",
+        lambda read: ohlc_bars(read()),
+        "stream_ohlc",
+        "complete",
+    )
 
 
 @query(
@@ -8184,49 +7972,20 @@ def q_stream_ohlc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch bars and applies the same closed-bar cutoff; the delay keeps
     the watermark hours away from any midnight bar boundary at every
     shipped SF, so the <= comparison is tie-free."""
-    import os
-    import tempfile
-
     from asterlake.operators.timeseries import ohlc_bars_windowed
-    from asterlake.tables import events_read_schema, normalize_events_ts
 
-    schema = events_read_schema(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as workdir:
-        src_dir = os.path.join(workdir, "events")
-        os.makedirs(src_dir)
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src_dir, "events.parquet"),
-        )
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema).parquet(src_dir)
-        ).withWatermark("ts", "1 hour")
-        bars = ohlc_bars_windowed(stream)
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            (
-                bars.writeStream.format("memory")
-                .queryName("stream_ohlc_append")
-                .outputMode("append")
-                .option(
-                    "checkpointLocation", os.path.join(workdir, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        return spark.table("stream_ohlc_append").select(
-            "user_id",
-            "bar_start",
-            "open",
-            "high",
-            "low",
-            "close",
-            "n_events",
-        )
+    # append-mode windows close only when the flush batch passes them
+    return _drain(
+        spark,
+        sf_dir,
+        "events",
+        lambda read: ohlc_bars_windowed(read().withWatermark("ts", "1 hour")),
+        "stream_ohlc_append",
+        "append",
+        flush=True,
+    ).select(
+        "user_id", "bar_start", "open", "high", "low", "close", "n_events"
+    )
 
 
 
@@ -9685,9 +9444,7 @@ def q_snapshot_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the oracle's plain filter row-for-row because pruning is a
     planning optimization, never a semantics change."""
     import atexit
-    import os
     import shutil
-    import tempfile
 
     from asterlake.sources.versioned import scan_version, write_version
 
@@ -10838,9 +10595,7 @@ def q_snapshot_scan_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     files and the re-applied filter removes their rows), and the result
     must equal the oracle's plain filter row-for-row."""
     import atexit
-    import os
     import shutil
-    import tempfile
 
     from asterlake.sources.versioned import scan_version, write_version
 
@@ -12258,9 +12013,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     File mtimes are pinned so the file source's modification-time
     ordering replays the waves in sequence order."""
     import glob
-    import os
     import shutil
-    import tempfile
 
     from asterlake.streaming.pipeline import (
         read_cdc_snapshot,
@@ -12315,9 +12068,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         snap_dir = os.path.join(workdir, "snapshot")
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
+        with pinned_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
             stream_apply_changes(
                 stream,
                 snap_dir,
@@ -12326,8 +12077,6 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(workdir, "ckpt"),
                 initial=o,
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         # materialize off the tempdir before it vanishes
         final = read_cdc_snapshot(spark, snap_dir).localCheckpoint(
             eager=True

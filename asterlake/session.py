@@ -25,6 +25,8 @@ The defaults are tuned for correctness at any scale and speed on local[N]:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -126,3 +128,27 @@ def ensure_parquet_nanos_conf(spark: SparkSession) -> None:
     key = "spark.sql.legacy.parquet.nanosAsLong"
     if spark.conf.get(key, "false") != "true":
         spark.conf.set(key, "true")
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, pins: dict[str, str]) -> Iterator[None]:
+    """Set runtime SQL confs for the body, then put the session back.
+
+    On exit, normal or by exception, each key gets its prior value back,
+    or is unset again if the session never set it (which restores
+    Spark's default rather than writing that default in). The pins are
+    session-global: a query planned on the same session from another
+    thread while the body runs sees them, so callers assume one planner
+    per session at a time.
+    """
+    prior = {key: spark.conf.get(key, None) for key in pins}
+    try:
+        for key, value in pins.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

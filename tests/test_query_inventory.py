@@ -4,7 +4,8 @@
 decorator or ``QUERIES["name"] = ...`` statement in ``asterlake/queries.py``
 fixes a query's position, and a later re-assignment (an oracle injected
 after the def) keeps it. The memo registry and the driver contract in
-``__spark_entry__`` must agree with that inventory.
+``__spark_entry__`` must agree with that inventory. Runtime conf writes
+stay in ``session.py`` and the memory-sink drain in one helper.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import ast
 from pathlib import Path
 
 import __spark_entry__
+import asterlake
 from asterlake import queries
 from asterlake.queries import MEMO_BUILDERS, QUERIES
 
@@ -64,3 +66,40 @@ def test_memo_rows_do_not_collide_with_queries():
 def test_driver_contract_matches_inventory():
     assert list(__spark_entry__.queries()) == list(QUERIES)
     assert set(__spark_entry__.oracle_sql()) <= set(QUERIES)
+
+
+def _calls(attr: str):
+    """(path, call) for every ``<expr>.<attr>(...)`` call in asterlake/."""
+    root = Path(asterlake.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == attr
+            ):
+                yield path.relative_to(root), node
+
+
+def test_conf_writes_only_in_session_module():
+    """Runtime conf pins go through ``session.pinned_conf``, which
+    restores (or unsets) what it changed; a bare ``conf.set`` elsewhere
+    leaks into the caller's session."""
+    writers = {
+        str(path)
+        for path, call in _calls("set")
+        if isinstance(call.func.value, ast.Attribute)
+        and call.func.value.attr == "conf"
+    }
+    assert writers <= {"session.py"}, writers
+
+
+def test_one_memory_sink_drain():
+    sinks = [
+        f"{path}:{call.lineno}"
+        for path, call in _calls("format")
+        if call.args
+        and isinstance(call.args[0], ast.Constant)
+        and call.args[0].value == "memory"
+    ]
+    assert len(sinks) == 1, sinks

@@ -12,7 +12,7 @@ import sys
 import textwrap
 
 # Most conf-sensitive surfaces: events ts encoding (nanosAsLong shim),
-# streaming conf save/restore, VARIANT, Arrow paths, decimal windows.
+# streaming conf pins, VARIANT, Arrow paths, decimal windows.
 SENSITIVE = [
     "q_window_event_gaps",
     "q_decayed_engagement",
@@ -32,6 +32,19 @@ SENSITIVE = [
     # r5: epoch/decimal arithmetic (TWAP) and IEEE bin assignment
     "q_twap_value",
     "q_drift_numeric",
+    # every conf-pinning streaming query: each must leave the caller's
+    # shuffle-partition and no-data-batch confs as it found them
+    "q_stream_linkage",
+    "q_stream_frequent",
+    "q_stream_interval_join",
+    "q_stream_stateful_counts",
+    "q_stream_dedup",
+    "q_stream_static_join",
+    "q_stream_session_window",
+    "q_stream_ewma",
+    "q_stream_ohlc",
+    "q_stream_ohlc_append",
+    "q_stream_cdc_apply",
 ]
 
 SCRIPT = textwrap.dedent(
@@ -42,16 +55,22 @@ SCRIPT = textwrap.dedent(
     from tests.oracle_utils import duck_connection, assert_matches_oracle
 
     names = sys.argv[1].split(",")
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.streaming.noDataMicroBatches.enabled")
     spark = (SparkSession.builder.master("local[4]")
              .appName("vanilla-driver-sim").getOrCreate())
     con = duck_connection("/root/testdata/sf0.001")
     qs, osql = e.queries(), e.oracle_sql()
     for n in names:
+        before = {k: spark.conf.get(k, None) for k in keys}
         df = qs[n](spark, "/root/testdata/sf0.001")
         if n in osql:
             assert_matches_oracle(df, con, osql[n], n)
         else:
             assert df.count() >= 0
+        after = {k: spark.conf.get(k, None) for k in keys}
+        assert after == before, (n, before, after)
+        assert not spark.streams.active, (n, spark.streams.active)
         print("VANILLA_OK", n, flush=True)
     spark.stop()
     """
