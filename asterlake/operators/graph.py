@@ -1,47 +1,155 @@
-"""Connected components over candidate-pair edges (duplicate clustering).
+"""Graph operators over edge DataFrames: connected components (duplicate
+clustering), PageRank, triangle counts, label propagation, k-core and BFS.
 
 Every dedup family in this engine (exact digests, MinHash/SimHash LSH,
-n-gram Jaccard — operators/dedup.py) stops at *pairs*. A training-data
-pipeline needs the transitive closure: if A~B and B~C, all three are one
-duplicate *cluster* and one survivor should represent it. That closure is
-connected components — the canonical iterative algorithm Spark has no
-built-in operator for (GraphFrames is an external package), so it is
-implemented here as a driver-coordinated fixpoint of DataFrame joins.
+n-gram Jaccard — operators/dedup.py) stops at *pairs*; connected
+components turns them into duplicate clusters. The other operators are
+the graph analytics a curation or recommender pipeline runs next to it.
+Spark has no built-in operator for any of them (GraphFrames is an
+external package), so each is written here over DataFrames, with
+integer arithmetic throughout so every result is hash-gateable against
+the DuckDB oracles.
 
-Algorithm: min-label propagation. Every vertex starts labeled with its own
-id; each round every vertex takes the min of its label and its neighbors'
-labels; converged when no label changes. Rounds = graph diameter.
+Two paths for the iterative loops. PageRank, label propagation, k-core
+(fixed-round and converged) and BFS first land their edge set with
+``localCheckpoint`` and count it in the same job. Then:
 
-Scale (100 TB corpus, billions of candidate edges):
+- Below ``SMALL_GRAPH_EDGES`` edges the whole recurrence runs in ONE task:
+  ``coalesce(1).mapInPandas`` hands every edge to a numpy kernel that
+  replays the distributed recurrence bit for bit (int64 only, floor
+  division at the same points, the same tie rules and node sets). On a
+  small graph the distributed loop's cost is Spark job launch, not data:
+  every round is a landing plus one job per AQE shuffle stage.
+- At or above it the distributed loop runs: per round one shuffle join
+  plus one map-side-combinable aggregate, key-partitioned on the node id,
+  with lineage truncated by ``localCheckpoint``.
+
+Every co-purchase graph the query suite builds at sf0.001, sf0.01 and
+sf0.1 (at most 2.4M edges) takes the one-task path, and each loop's
+docstring gives its alternating A/B. The threshold's own measurement is
+at ``SMALL_GRAPH_EDGES``.
+
+Connected components stays distributed at every size: its dedup graphs
+are near-cliques that converge in 2-3 rounds, so a one-task path has
+few round jobs to remove.
+
+Connected components algorithm: min-label propagation. Every vertex
+starts labeled with its own id; each round every vertex takes the min of
+its label and its neighbors' labels; converged when no label changes.
+Rounds = graph diameter.
 
 - Each round is ONE shuffle join (labels ⋈ edges on the vertex id) + ONE
-  partial-aggregated groupBy min — both key-partitioned on the vertex id,
-  so AQE coalesces/splits per-round. Nothing driver-side except the
-  convergence counter (a count() action per round — the unavoidable
-  driver decision every iterative dataflow makes, same as GraphFrames/
-  GraphX supersteps).
-- Lineage is truncated every round with ``localCheckpoint`` — without it
-  the plan doubles per iteration and round k replays rounds 1..k-1.
-- Diameter bound: duplicate-cluster graphs are near-cliques (every member
-  pairs with most others), so propagation converges in 2-3 rounds
-  regardless of corpus size. For adversarial long-path graphs pass
-  ``method="star"``: the alternating large-star/small-star algorithm
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SOCC'14) converges in O(log^2 n) rounds independent of diameter. Both
-  methods are exact; propagation stays the default because a dedup
-  round is one join + one partial-agg min (star rounds are two
-  grouped emissions + a distinct), and near-clique inputs finish in
-  fewer total shuffles.
+  partial-aggregated groupBy min, both key-partitioned on the vertex id.
+  Nothing driver-side except the convergence counter, which rides the
+  round's checkpoint job as an ``Observation``.
+- Diameter bound: duplicate-cluster graphs are near-cliques, so
+  propagation converges in 2-3 rounds regardless of corpus size. For
+  adversarial long-path graphs pass ``method="star"``: the alternating
+  large-star/small-star algorithm (Kiveris et al., "Connected Components
+  in MapReduce and Beyond", SOCC'14) converges in O(log^2 n) rounds
+  independent of diameter. Both methods are exact.
 """
 
 from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, Observation, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from asterlake.session import pinned_conf
+
+# Edge count below which an iterative loop runs in one task (see the
+# module docstring). Set by alternating A/B on 4 cores, distributed ->
+# one task, medians: at sf0.1 PageRank on 2.4M edges 7.90 -> 4.14 s;
+# on a random 4M-edge graph (40k nodes) PageRank 11.2 -> 5.0 s, label
+# propagation 15.3 -> 6.0 s, k-core 15.9 -> 5.6 s, converged k-core
+# 34.0 -> 8.5 s and BFS 6.9 -> 5.8 s, BFS nearest its crossover. The
+# kernels peak at about 80 MB of Python worker memory per million
+# edges, so the bound also keeps the one worker near 320 MB.
+SMALL_GRAPH_EDGES = 4_000_000
+
+# The H-index of a node's (value h, count c) neighbour histogram: walk
+# the distinct values descending and keep max(min(h, running count)),
+# which equals the H-index at distinct-value group boundaries.
+_HINDEX = (
+    "aggregate(sort_array(collect_list(struct(h, c)), false), "
+    "struct(CAST(0 AS BIGINT) AS cum, CAST(0 AS BIGINT) AS best), "
+    "(acc, x) -> struct(acc.cum + x.c, "
+    "greatest(acc.best, least(x.h, acc.cum + x.c))), "
+    "acc -> acc.best)"
+)
+
+
+def _land(df: DataFrame) -> tuple[DataFrame, int]:
+    """``localCheckpoint`` ``df`` and count its rows in the same job."""
+    obs = Observation()
+    landed = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return landed, obs.get["n"]
+
+
+def _one_task(df: DataFrame, schema: StructType, kernel) -> DataFrame:
+    """Run ``kernel`` over ALL rows of ``df`` in one task.
+
+    ``coalesce(1)`` is narrow, so no exchange; it also yields exactly one
+    partition when ``df`` has none, so the kernel always runs.
+    ``kernel`` takes one numpy array per column of ``df`` and returns a
+    dict of output arrays keyed by the field names of ``schema``."""
+    cols = df.columns
+
+    def run(batches):
+        frames = list(batches)
+        if frames:
+            pdf = pd.concat(frames, ignore_index=True)
+            arrays = [pdf[c].to_numpy() for c in cols]
+        else:
+            arrays = [np.empty(0, np.int64) for _ in cols]
+        yield pd.DataFrame(kernel(*arrays))
+
+    return df.coalesce(1).mapInPandas(run, schema)
+
+
+def _one_task_converged(
+    df: DataFrame, schema: StructType, kernel
+) -> tuple[DataFrame, int, bool]:
+    """:func:`_one_task` for a convergence-gated kernel, landed eagerly.
+
+    ``kernel`` returns ``(columns, rounds_run, converged)``. Both scalars
+    travel in a trailer row (first column null) and come back to the
+    driver through an ``Observation`` on the landing job, so the caller
+    can return ``rounds_run`` and warn on the driver."""
+    node = schema.names[0]
+    meta = [StructField("_rounds", LongType()), StructField("_conv", BooleanType())]
+
+    def with_trailer(*arrays):
+        out, rounds, converged = kernel(*arrays)
+        n = len(out[node])
+        cols = {**out, "_rounds": np.zeros(n, np.int64), "_conv": np.zeros(n, bool)}
+        cols[node] = cols[node].astype(object)
+        trailer = {**dict.fromkeys(cols, 0), node: None,
+                   "_rounds": rounds, "_conv": converged}
+        return {k: np.append(v, trailer[k]) for k, v in cols.items()}
+
+    obs = Observation()
+    landed = (
+        _one_task(df, StructType(schema.fields + meta), with_trailer)
+        .observe(obs, F.max("_rounds").alias("r"), F.max("_conv").alias("c"))
+        .where(F.col(node).isNotNull())
+        .select(*schema.names)
+        .localCheckpoint()
+    )
+    return landed, obs.get["r"], obs.get["c"]
+
+
+def _groups(key: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Start and length of each run of equal values in a sorted array."""
+    new = np.ones(len(key), bool)
+    new[1:] = key[1:] != key[:-1]
+    start = np.flatnonzero(new)
+    return start, np.diff(np.append(start, len(key)))
 
 
 def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -283,20 +391,20 @@ def pagerank_converged(
     damping_den: int = 20,
     scale: int = 1_000_000_000_000,
 ) -> tuple[DataFrame, int]:
-    """Convergence-gated twin of :func:`pagerank_fixed_point` (round-4
-    verdict stretch): identical exact BIGINT recursion, but the loop
-    stops as soon as ``max_node |pr' - pr| <= tol_fp`` (fixed-point
-    units, i.e. tol_fp/scale in rank mass) instead of running a fixed
-    count — so a 100x graph neither over-iterates past its stationary
-    point nor under-iterates before it. Returns ``(ranks, rounds_run)``.
+    """Convergence-gated twin of :func:`pagerank_fixed_point`: the same
+    exact BIGINT recursion, but the loop stops as soon as
+    ``max_node |pr' - pr| <= tol_fp`` (fixed-point units, i.e.
+    tol_fp/scale in rank mass) instead of running a fixed count.
+    Returns ``(ranks, rounds_run)``.
 
-    The gate costs one node-sized max-|delta| aggregate per round (old
-    and new ranks are co-partitioned on the node key, so the diff join
-    is exchange-free); because the arithmetic is exact integers, the
-    check is deterministic — no float-noise flapping around the
-    threshold. With ``tol_fp=0`` it stops exactly at the integer
-    fixpoint. A run that hits ``max_iter`` without converging warns,
-    same contract as connected_components."""
+    Because the arithmetic is exact integers, the gate is deterministic —
+    no float-noise flapping around the threshold; ``tol_fp=0`` stops
+    exactly at the integer fixpoint. The result is landed before
+    returning on both paths: the distributed loop probes max-|delta| with
+    one node-sized aggregate per round, and the one-task path brings its
+    rounds and converged flag back with the landing job. A run that hits
+    ``max_iter`` without converging warns on the driver, as does an empty
+    graph (its delta is undefined)."""
     return _pagerank_loop(
         edges, src, dst, max_iter, damping_num, damping_den, scale,
         tol_fp=tol_fp,
@@ -323,33 +431,59 @@ def pagerank_fixed_point(
     every engine. Precision loss from the floor divisions is identical
     everywhere, bounded by iters * (deg truncation) — fine for ranking.
 
-    Scale shape: the edge list (with its per-source degree attached) is
-    localCheckpoint-materialized, and the rank table lands every
-    ``ckpt_every`` rounds (plus the final round) — the kcore_decomposition
-    lineage-truncation cadence (guide §2.4). Without any landing every
-    round's LAZY plan re-derives the whole edge-generation subtree and
-    the join tree deepens exponentially (measured 14s -> 3.4s at sf0.1
-    for the co-purchase gate); landing EVERY round pays one eager
-    materialization job per round the fixed-count loop doesn't need
-    (r15: ckpt_every=3 measured 6.8 -> 5.2 s same-session min at sf0.1,
-    values bit-identical — un-landed rounds dedup through
-    ReusedExchange). Per round: one join of ranks to the pinned edges on
-    the source key and one sum keyed on the destination — 2 exchanges
-    over (node, long) pairs. ``iters`` is fixed (the
-    standard production choice: ~O(log n) rounds approximate the
-    stationary point well before convergence detection pays for
-    itself); for convergence-gated variants reuse the
-    connected_components loop skeleton.
+    Nodes are the non-null sources (dangling-free by construction when
+    the caller symmetrizes an undirected graph, as the co-purchase query
+    does); multi-edges count with multiplicity; an edge with a null or
+    non-source destination counts toward its source's degree but its
+    share of rank is dropped.
 
-    Nodes are taken from the edge endpoints (dangling-free by
-    construction when the caller symmetrizes an undirected graph, as the
-    co-purchase query does); multi-edges are honored with multiplicity.
+    The edge set lands once (``localCheckpoint``, counted in the same
+    job). Below ``SMALL_GRAPH_EDGES`` edges the ``iters`` rounds run in
+    one task inside the caller's action. Above it each round is one join
+    of ranks to the degree-attached edges on the source key and one sum
+    keyed on the destination; the rank table lands every ``ckpt_every``
+    rounds and after the last, which keeps the plan depth bounded while
+    sparing a landing job per round (values identical at any cadence).
+    Measured for q_pagerank_copurchase on 4 cores (alternating
+    in-session A/B, medians, distributed -> one task): 2.19 -> 0.55 s
+    at sf0.001, 7.90 -> 4.14 s at sf0.1 (2.4M edges).
     """
     pr, _ = _pagerank_loop(
         edges, src, dst, iters, damping_num, damping_den, scale,
         tol_fp=None, ckpt_every=ckpt_every,
     )
     return pr
+
+
+def _positions(nodes: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Index of each ``x`` in the sorted ``nodes``; -1 where absent."""
+    if len(nodes) == 0:
+        return np.full(len(x), -1)
+    pos = np.minimum(np.searchsorted(nodes, x), len(nodes) - 1)
+    return np.where(nodes[pos] == x, pos, -1)
+
+
+def _pagerank_kernel(s, d, lost, iters, damping_num, damping_den, scale, tol_fp):
+    """The distributed PageRank recurrence over edge arrays, in int64.
+
+    ``lost`` marks edges whose destination was null. Returns
+    ``(columns, rounds_run, converged)``."""
+    nodes, si = np.unique(s, return_inverse=True)
+    n = len(nodes)
+    deg = np.bincount(si, minlength=n)
+    di = _positions(nodes, d)
+    to = (di >= 0) & ~lost
+    pr = np.full(n, scale // max(n, 1), np.int64)
+    base = (damping_den - damping_num) * scale // damping_den // max(n, 1)
+    for rounds in range(1, iters + 1):
+        sums = np.zeros(n, np.int64)
+        np.add.at(sums, di[to], (pr[si] // deg[si])[to])
+        new = base + damping_num * sums // damping_den
+        delta = np.abs(new - pr).max(initial=0)
+        pr = new
+        if tol_fp is not None and n and delta <= tol_fp:
+            return {"node": nodes, "pagerank_fp": pr}, rounds, True
+    return {"node": nodes, "pagerank_fp": pr}, iters, False
 
 
 def _pagerank_loop(
@@ -363,21 +497,63 @@ def _pagerank_loop(
     tol_fp: int | None,
     ckpt_every: int = 1,
 ) -> tuple[DataFrame, int]:
-    # Materialize the edge set ONCE (deg and the joined working set both
-    # derive from these blocks, not from a re-run of the caller's edge-
-    # generation subtree), then pin BOTH iteration inputs to one explicit
-    # hash partitioning sized to the edge count — the connected_components
-    # discipline: edges on the probe key and ranks on the node key at the
-    # SAME count make the per-round join exchange-free; each round's only
-    # shuffle is the destination-keyed sum.
+    e, n_edges = _land(edges.select(src, dst))
+    if n_edges < SMALL_GRAPH_EDGES:
+        pr, rounds, converged = _pagerank_one_task(
+            e, src, dst, iters, damping_num, damping_den, scale, tol_fp
+        )
+    else:
+        pr, rounds, converged = _pagerank_rounds(
+            e, src, dst, iters, damping_num, damping_den, scale, tol_fp,
+            ckpt_every,
+        )
+    if tol_fp is not None and not converged:
+        warnings.warn(
+            f"pagerank_converged: max_iter={iters} reached with "
+            f"max |delta| still above tol_fp={tol_fp}; returning "
+            "the un-converged ranks",
+            stacklevel=3,
+        )
+    return pr, rounds
+
+
+def _pagerank_one_task(e, src, dst, iters, damping_num, damping_den, scale, tol_fp):
+    # null sources never join their degree in the distributed loop; a
+    # null destination becomes a flag, since a nullable long column
+    # would reach pandas as float64
+    inputs = e.where(F.col(src).isNotNull()).select(
+        F.col(src).alias("_s"),
+        F.coalesce(F.col(dst), F.col(src)).alias("_d"),
+        F.col(dst).isNull().alias("_lost"),
+    )
+    schema = StructType([
+        StructField("node", e.schema[src].dataType),
+        StructField("pagerank_fp", LongType()),
+    ])
+
+    def kernel(s, d, lost):
+        return _pagerank_kernel(
+            s, d, lost, iters, damping_num, damping_den, scale, tol_fp
+        )
+
+    if tol_fp is None:
+        return _one_task(inputs, schema, lambda *a: kernel(*a)[0]), iters, False
+    return _one_task_converged(inputs, schema, kernel)
+
+
+def _pagerank_rounds(
+    edges, src, dst, iters, damping_num, damping_den, scale, tol_fp, ckpt_every
+):
+    # Pin both iteration inputs to one explicit hash partitioning sized
+    # to the parallelism: edges on the probe key and ranks on the node
+    # key at the SAME count make the per-round join exchange-free; each
+    # round's only shuffle is the destination-keyed sum.
     spark = edges.sparkSession
     parts = max(4, min(256, spark.sparkContext.defaultParallelism))
     # Degree via aggregate + shuffle-hash join, NOT a window: the window
-    # form sorts the full edge set within partitions (the dominant cost
-    # of the whole operator — measured 6.0s of a 6.6s sf0.1 run on 2.4M
-    # edges); the aggregate is map-side combinable and both join sides
-    # share the hash(src) partitioning, so the attach is sort-free and
-    # exchange-free at any node cardinality (no broadcast assumption).
+    # form sorts the full edge set within partitions (measured 6.0s of a
+    # 6.6s sf0.1 run on 2.4M edges); the aggregate is map-side
+    # combinable and both join sides share the hash(src) partitioning.
     edges_parted = edges.repartition(parts, src)
     degrees = edges_parted.groupBy(src).agg(
         F.count("*").cast("bigint").alias("_deg")
@@ -388,9 +564,8 @@ def _pagerank_loop(
     # node list + degrees straight off the materialized blocks; the
     # groupBy's required partitioning is already satisfied (hash(src))
     deg = working.groupBy(src).agg(F.min("_deg").alias("_deg"))
-    # the 1-row node count rides a broadcast into EVERY round's rank
+    # the 1-row node count rides a broadcast into every round's rank
     # rebuild — checkpoint it once so each round reads one cached row
-    # instead of re-aggregating the full edge set
     n_nodes = deg.agg(
         F.count("*").cast("bigint").alias("_n")
     ).localCheckpoint()
@@ -408,12 +583,11 @@ def _pagerank_loop(
         f"DIV {damping_den}) DIV _n"
     )
     rounds = 0
+    converged = False
     with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         for _i in range(iters):
-            # shuffle-hash hint: build a hash map of the node-sized rank
-            # table per partition instead of sort-merge — co-partitioned
-            # inputs make it exchange-free AND skip re-sorting the edge
-            # blocks every round (the dominant per-round cost otherwise)
+            # shuffle-hash hint: co-partitioned inputs make the join
+            # exchange-free and skip re-sorting the edge blocks
             contrib = working.join(
                 pr.hint("shuffle_hash"), working[src] == pr["node"]
             ).select(
@@ -441,20 +615,12 @@ def _pagerank_loop(
                 )
             )
             rounds += 1
-            # Landing cadence (guide §2.4 lineage truncation, the kcore
-            # ckpt_every discipline): the fixed-point variant runs NO
-            # mid-loop action, so a per-round localCheckpoint pays one
-            # eager materialization job per round for nothing — land
-            # every ``ckpt_every`` rounds instead. The un-landed round's
-            # duplicated pr subtree dedups through ReusedExchange (pure
-            # SQL subplans canonicalize); checkpointing is semantics-
-            # free, values identical. The FINAL round always lands so
-            # the returned frame is materialized while the loop's
-            # shuffle-partition pin is still in force (an un-landed
-            # tail would execute later at the ambient conf). The
-            # convergence-gated variant
-            # (tol_fp set) keeps per-round landings: its delta probe
-            # is an action over BOTH pr and prev_pr every round.
+            # The fixed-count variant runs no mid-loop action, so it
+            # lands every ``ckpt_every`` rounds (un-landed rounds dedup
+            # through ReusedExchange). The final round always lands, so
+            # it executes while the shuffle-partition pin is in force.
+            # The convergence-gated variant lands every round: its delta
+            # probe is an action over both pr and prev_pr.
             if (
                 tol_fp is not None
                 or rounds % max(ckpt_every, 1) == 0
@@ -462,8 +628,7 @@ def _pagerank_loop(
             ):
                 pr = pr.localCheckpoint()
             if tol_fp is not None:
-                # exact integer max-|delta| over co-partitioned ranks:
-                # exchange-free shuffle-hash join + scalar aggregate
+                # exact integer max-|delta| over co-partitioned ranks
                 delta = (
                     prev_pr.withColumnRenamed("pr", "_pr_old")
                     .join(pr.hint("shuffle_hash"), "node")
@@ -471,16 +636,13 @@ def _pagerank_loop(
                     .collect()[0][0]  # driver-ok: one scalar per round
                 )
                 if delta is not None and delta <= tol_fp:
+                    converged = True
                     break
-        else:
-            if tol_fp is not None:
-                warnings.warn(
-                    f"pagerank_converged: max_iter={iters} reached with "
-                    f"max |delta| still above tol_fp={tol_fp}; returning "
-                    "the un-converged ranks",
-                    stacklevel=3,
-                )
-    return pr.select(F.col("node"), F.col("pr").alias("pagerank_fp")), rounds
+    return (
+        pr.select(F.col("node"), F.col("pr").alias("pagerank_fp")),
+        rounds,
+        converged,
+    )
 
 
 def triangle_counts(
@@ -578,6 +740,35 @@ def triangle_counts(
     )
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> tuple[DataFrame, int]:
+    """Both directions of every edge, self-loops and null endpoints
+    dropped, deduplicated, landed, with its row count."""
+    return _land(
+        _symmetrized(edges, src, dst)
+        .filter(F.col("_s") != F.col("_d"))
+        .distinct()
+    )
+
+
+def _lpa_kernel(s, d, iters):
+    """Synchronous label propagation over the symmetric edge arrays."""
+    nodes, si = np.unique(s, return_inverse=True)
+    di = np.searchsorted(nodes, d)
+    n = len(nodes)
+    lab = np.arange(n)  # labels as indices into the sorted node ids
+    for _ in range(iters):
+        # (node, label) message counts: one int64 key sorts by node,
+        # then label
+        key, count = np.unique(di * n + lab[si], return_counts=True)
+        start, size = _groups(key // n)
+        top = np.repeat(np.maximum.reduceat(count, start), size)
+        # per node: count DESC, then label ASC; every node has a neighbour
+        best = np.flatnonzero(count == top)
+        first, _ = _groups(key[best] // n)
+        lab = key[best[first]] % n
+    return {"node": nodes, "community": nodes[lab]}
+
+
 def label_propagation(
     edges: DataFrame,
     iters: int = 3,
@@ -595,38 +786,32 @@ def label_propagation(
     synchronous LPA can 2-cycle on bipartite structures, and a fixed
     round count is what two engines can replay bit-for-bit.
 
-    Returns ``(node, community)`` for every node with at least one edge.
+    Returns ``(node, community)`` for every node with at least one edge
+    (self-loops and null endpoints dropped).
 
-    Scale / r14 round shape (guide §2.4/§3.1, same as
-    kcore_decomposition): the per-round join is a hinted SHUFFLED-HASH
-    join — AQE otherwise broadcast-converts the node-sized label table
-    every round (a per-round driver collect + broadcast build) at
-    bench scale, and at 100 TB the label table cannot broadcast, so
-    the hinted shape is both the faster local one and the only
-    scale-honest one (and never sorts the edge side). The (node,
-    label) count and the argmax (max over struct(count, -label) —
-    never a per-node window) STACK on ONE explicit node-keyed
-    REPARTITION_BY_NUM exchange (hash(node) satisfies the (node, lab)
-    clustering) — was one (node, lab) exchange plus one (node)
-    exchange. ``localCheckpoint`` truncates lineage between rounds
-    (the connected_components discipline); the loop pins
-    ``spark.sql.shuffle.partitions`` to the parallelism-derived
-    ``parts``. Labels are node ids (longs); no text, no payloads in
-    any shuffle. A/B at sf0.1 (alternating in-session, results
-    bit-identical): 4.51 -> 3.39s / 5.01 -> 4.40s / 3.96 -> 2.89s
-    across three sessions; dropping a speculative edge-side
-    pre-repartition (localCheckpoint loses partitioning under AQE)
-    measured a further 6.57 -> 3.96s at the session median.
+    The undirected edge set lands once and is counted in the same job.
+    Below ``SMALL_GRAPH_EDGES`` edges the rounds run in one task inside
+    the caller's action (q_label_propagation on 4 cores, alternating
+    A/B medians, distributed -> one task: 0.76 -> 0.40 s at sf0.001,
+    3.19 -> 1.94 s at sf0.1 on 650k edges).
+    Above it each round is a hinted SHUFFLED-HASH join (AQE would
+    otherwise broadcast-convert the node-sized label table every round,
+    and at 100 TB it cannot broadcast) and the (node, label) count and
+    the argmax (max over struct(count, -label) — never a per-node window)
+    stack on ONE explicit node-keyed exchange; every round lands, and the
+    loop pins ``spark.sql.shuffle.partitions`` to the parallelism-derived
+    ``parts``. Labels are node ids (longs); no payloads in any shuffle.
     """
     spark = edges.sparkSession
     parts = max(4, min(256, spark.sparkContext.defaultParallelism))
     with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
-        und = (
-            _symmetrized(edges, src, dst)
-            .filter(F.col("_s") != F.col("_d"))
-            .distinct()
-            .localCheckpoint()
-        )
+        und, n_edges = _undirected(edges, src, dst)
+        if n_edges < SMALL_GRAPH_EDGES:
+            node = und.schema["_s"].dataType
+            schema = StructType(
+                [StructField("node", node), StructField("community", node)]
+            )
+            return _one_task(und, schema, lambda s, d: _lpa_kernel(s, d, iters))
         labels = (
             und.select(F.col("_s").alias("node"))
             .distinct()
@@ -660,6 +845,36 @@ def label_propagation(
     return labels.select("node", F.col("lab").alias("community"))
 
 
+def _kcore_kernel(s, d, max_rounds, min_rounds):
+    """Synchronous H-index rounds over the symmetric edge arrays,
+    stopping at the first stationary round at or after ``min_rounds``.
+    Returns ``(columns, rounds_run, converged)``."""
+    nodes, si = np.unique(s, return_inverse=True)
+    di = np.searchsorted(nodes, d)
+    h = np.bincount(si, minlength=len(nodes))
+    for rounds in range(1, max_rounds + 1):
+        # each node's neighbour values, descending, under one int64 key;
+        # the H-index is the max over ranks i of min(i-th value, i)
+        top = h.max(initial=0)
+        key = np.sort(di * (top + 1) + (top - h[si]))
+        val = top - key % (top + 1)
+        start, size = _groups(key // (top + 1))
+        rank = np.arange(1, len(key) + 1) - np.repeat(start, size)
+        new = np.maximum.reduceat(np.minimum(val, rank), start)
+        stationary = rounds >= min_rounds and np.array_equal(new, h)
+        h = new
+        if stationary:
+            return {"node": nodes, "coreness": h}, rounds, True
+    return {"node": nodes, "coreness": h}, max_rounds, False
+
+
+def _kcore_schema(und: DataFrame) -> StructType:
+    return StructType([
+        StructField("node", und.schema["_s"].dataType),
+        StructField("coreness", LongType()),
+    ])
+
+
 def kcore_decomposition(
     edges: DataFrame,
     rounds: int = 6,
@@ -679,83 +894,44 @@ def kcore_decomposition(
     depth (tests/test_winnow_triangles.py measures the gap against an
     exact Batagelj-Zaversnik peel twin: at the default 6 rounds the
     bound is within +1 at sf0.001, +2 at sf0.1; exactness there needs
-    ~18 rounds). Callers needing exact coreness raise ``rounds``; the
-    default favors the fixed-cost screening shape — the standard
-    community-quality / graph-degeneracy filter next to closure,
-    PageRank, triangles and label propagation.
+    ~18 rounds). Callers needing exact coreness raise ``rounds`` or use
+    :func:`kcore_converged`.
 
     Exactly ``rounds`` synchronous rounds run — no convergence test —
-    so the operator is a fixed, engine-replayable recurrence (the
-    label_propagation discipline): an unrolled SQL oracle replays it
-    bit-for-bit, and extra rounds past the fixpoint are stationary
-    (the H-index of converged values reproduces them).
+    so the operator is a fixed, engine-replayable recurrence: an
+    unrolled SQL oracle replays it bit-for-bit, and extra rounds past
+    the fixpoint are stationary.
 
     Returns ``(node, coreness)`` for every node with at least one edge
-    (coreness is a BIGINT — every step is integer-exact, hash-gateable).
+    (self-loops and null endpoints dropped; coreness is an exact BIGINT).
 
-    Scale: per round, ONE shuffle join (values x edges on the source
-    id) + ONE map-side-combinable (node, value) count; the per-node
-    H-index folds over the (value, count) HISTOGRAM — sorted desc, the
-    running count tracks ``max(min(value, cum))``, which equals the
-    H-index at distinct-value group boundaries — as a single JVM-side
-    expression: no window, and the collected histogram is bounded by
-    the node's DISTINCT neighbor-value count, which the iteration
-    itself crushes toward the (tiny) coreness range after round one —
-    a hub's histogram is at most max-coreness entries, not its degree.
-
-    Unlike the convergence-checked loops (connected_components), the
-    fixed-round recurrence runs NO mid-loop action, so per-round
-    ``localCheckpoint`` would pay an eager materialization job per
-    round for nothing; lineage is instead truncated every
-    ``ckpt_every`` rounds — enough to keep the optimizer's plan depth
-    bounded while the whole recurrence executes as ~rounds/ckpt_every
-    jobs (measured at sf0.1: cold 16.3s with per-round landings vs
-    7-9.5s at every-3 in the same session positions; checkpointing is
-    semantics-free, values identical).
-
-    r14 round shape (guide §2.4/§3.1): (a) the per-round join carries a
-    ``shuffle_hash`` hint — without it AQE broadcast-converts the
-    node-sized value table every round at bench scale (a per-round
-    driver collect + broadcast build), and at 100 TB the value table
-    cannot broadcast at all, so the hinted shuffled-hash is both the
-    faster local shape and the only scale-honest one (and it never
-    sorts the edge side the way sort-merge would); (b) the message
-    aggregate is keyed to ``node`` ONLY via an explicit
-    REPARTITION_BY_NUM exchange — hash(node) satisfies the (node, h)
-    clustering, so histogram + H-index fold STACK on that single
-    exchange (was: one (node, h) exchange + one (node) exchange);
-    (c) the loop pins ``spark.sql.shuffle.partitions`` to the
-    parallelism-derived ``parts`` so low-core runs don't pay 32-way
-    task overhead per round (``pinned_conf``), and every round
-    (including the last — the final round always lands, r15) executes
-    under the pin. NOTE an explicit pre-partitioning of the
-    edge landing is NOT kept: ``localCheckpoint`` does not preserve
-    outputPartitioning under AQE (measured: the join re-exchanges a
-    repartition(parts, _s).localCheckpoint() edge side anyway), and
-    the persist()-pinned alternative that does preserve it measured
-    slower (deserialized cache reads; 5.0 -> 9.0s on the convergence
-    twin). A/B at sf0.1 (alternating in-session, results
-    bit-identical): 5.30 -> 4.80 / 6.26 -> 6.22 (this fixed-round
-    variant), 4.51 -> 3.39 / 3.96 -> 2.89 (label_propagation, same
-    round shape, where the shared exchange repeats 3x)."""
+    The undirected edge set lands once and is counted in the same job.
+    Below ``SMALL_GRAPH_EDGES`` edges the rounds run in one task inside
+    the caller's action, on the kernel :func:`kcore_converged` shares
+    (q_kcore_decompose on 4 cores, alternating A/B medians, distributed
+    -> one task: 0.88 -> 0.39 s at sf0.001, 4.29 -> 1.91 s at sf0.1).
+    Above it each round is ONE hinted shuffled-hash join (values x edges
+    on the source id; AQE would otherwise broadcast-convert the value
+    table every round, and at 100 TB it cannot broadcast) + ONE
+    node-keyed exchange under which the (node, value) histogram and the
+    H-index fold ``_HINDEX`` stack — no window, and after round one a
+    hub's histogram is bounded by the coreness range, not its degree.
+    With no mid-loop action, values land every ``ckpt_every`` rounds and
+    after the last, so every round runs under the loop's
+    ``spark.sql.shuffle.partitions`` pin (values identical at any
+    cadence)."""
     spark = edges.sparkSession
     parts = max(4, min(256, spark.sparkContext.defaultParallelism))
     with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
-        und = (
-            _symmetrized(edges, src, dst)
-            .filter(F.col("_s") != F.col("_d"))
-            .distinct()
-            .localCheckpoint()
-        )
+        und, n_edges = _undirected(edges, src, dst)
+        if n_edges < SMALL_GRAPH_EDGES:
+            return _one_task(
+                und,
+                _kcore_schema(und),
+                lambda s, d: _kcore_kernel(s, d, rounds, rounds + 1)[0],
+            )
         vals = und.groupBy(F.col("_s").alias("node")).agg(
             F.count("*").cast("bigint").alias("h")
-        )
-        hindex = F.expr(
-            "aggregate(sort_array(collect_list(struct(h, c)), false), "
-            "struct(CAST(0 AS BIGINT) AS cum, CAST(0 AS BIGINT) AS best), "
-            "(acc, x) -> struct(acc.cum + x.c, "
-            "greatest(acc.best, least(x.h, acc.cum + x.c))), "
-            "acc -> acc.best)"
         )
         for r in range(rounds):
             msgs = und.join(
@@ -768,13 +944,7 @@ def kcore_decomposition(
                 .groupBy("node", "h")
                 .agg(F.count("*").cast("bigint").alias("c"))
             )
-            vals = hist.groupBy("node").agg(hindex.alias("h"))
-            # The FINAL round lands too (r15, r14 ADVICE): the returned
-            # frame must materialize while the loop's shuffle-partition
-            # pin is still in force — an un-landed tail would execute
-            # after the pin is lifted, running the last rounds at the
-            # ambient partition count the pin exists to avoid (the
-            # pagerank_fixed_point discipline).
+            vals = hist.groupBy("node").agg(F.expr(_HINDEX).alias("h"))
             if ckpt_every and (
                 (r + 1) % ckpt_every == 0 or r + 1 == rounds
             ):
@@ -790,60 +960,48 @@ def kcore_converged(
     min_rounds: int = 1,
     ckpt_every: int = 3,
 ) -> "tuple[DataFrame, int]":
-    """Convergence-EXACT twin of :func:`kcore_decomposition` (the
-    :func:`pagerank_converged` discipline, r13 verdict stretch #6):
-    the same synchronous H-index recurrence (Lu et al., Nature
-    Communications 2016), but the loop stops the first round NO node's
-    value changes — and because the per-node sequence is monotone
-    decreasing over integers, a stationary round IS the fixpoint, and
-    the fixpoint IS the coreness (not an upper bound). Returns
-    ``(frame, rounds_run)`` where ``rounds_run`` counts executed
-    rounds including the final stationary one; exactness is pinned
-    against the Batagelj-Zaversnik peel in
-    tests/test_winnow_triangles.py.
+    """Convergence-EXACT twin of :func:`kcore_decomposition`: the same
+    synchronous H-index recurrence (Lu et al., Nature Communications
+    2016), but the loop stops the first round NO node's value changes —
+    and because the per-node sequence is monotone decreasing over
+    integers, a stationary round IS the fixpoint, and the fixpoint IS
+    the coreness (not an upper bound). Returns ``(frame, rounds_run)``
+    where ``rounds_run`` counts executed rounds including the final
+    stationary one; exactness is pinned against the Batagelj-Zaversnik
+    peel in tests/test_winnow_triangles.py. The gate is deterministic —
+    exact BIGINT values, no float flapping. A run that hits
+    ``max_rounds`` without converging warns on the driver, same contract
+    as connected_components.
 
-    The convergence gate is deterministic — exact BIGINT values, no
-    float flapping — and costs one co-partitioned anti-equality probe
-    per round (both value tables come off ``groupBy(node)`` at the
-    same shuffle partitioning; ``limit(1)`` lets the probe
-    short-circuit at the first changed node). Unlike the fixed-round
-    variant, a probed round runs an ACTION, so its values are
-    ``localCheckpoint``-landed (the connected_components shape) — the
-    price of knowing when to stop; callers screening at a fixed budget
-    keep :func:`kcore_decomposition`. A run that hits ``max_rounds``
-    without converging warns, same contract as connected_components.
+    ``min_rounds``: rounds below it are not probed — for callers that
+    KNOW a lower bound on the depth. Values are identical either way
+    (extra rounds past the fixpoint are stationary); if the graph
+    converges below ``min_rounds``, ``rounds_run`` reports the first
+    PROBED stationary round, an upper bound on the true depth.
 
-    ``min_rounds``: rounds below it skip the probe and run in the
-    CHEAP fixed-round shape (no action, lineage truncated every
-    ``ckpt_every`` rounds) — the convergence-tax amortization for
-    callers that KNOW a lower bound on the depth (a graph family whose
-    measured depth never dips below k pays k-1 landings for nothing).
-    Values are identical either way — skipping a probe can only run
-    extra rounds, and extra rounds past the fixpoint are stationary;
-    if the graph does converge below ``min_rounds``, ``rounds_run``
-    reports the first PROBED stationary round (an upper bound on the
-    true depth), which the caller accepted by raising ``min_rounds``.
-
-    Scale shape per round: identical to the fixed-round variant (ONE
-    shuffle join + ONE combinable histogram + the JVM-side H-index
-    fold), plus the node-sized change probe on probed rounds."""
-    und = (
-        _symmetrized(edges, src, dst)
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
-        .localCheckpoint()
-    )
+    The result is landed before returning. Below ``SMALL_GRAPH_EDGES``
+    undirected edges the whole loop runs in one task (q_kcore_exact on
+    4 cores, alternating A/B medians, distributed -> one task: 1.22 ->
+    0.54 s at sf0.001, 4.72 -> 1.00 s at sf0.1),
+    and its rounds and converged flag come back with the landing job.
+    Above it each round has the fixed-round variant's shape plus, on
+    probed rounds, a landing and a node-sized change probe
+    (``limit(1)`` short-circuits at the first changed node); unprobed
+    rounds land every ``ckpt_every`` rounds."""
+    und, n_edges = _undirected(edges, src, dst)
+    if n_edges < SMALL_GRAPH_EDGES:
+        out, rounds_run, converged = _one_task_converged(
+            und,
+            _kcore_schema(und),
+            lambda s, d: _kcore_kernel(s, d, max_rounds, min_rounds),
+        )
+        if not converged:
+            _warn_not_converged("h-index", max_rounds)
+        return out, rounds_run
     vals = (
         und.groupBy(F.col("_s").alias("node"))
         .agg(F.count("*").cast("bigint").alias("h"))
         .localCheckpoint()
-    )
-    hindex = F.expr(
-        "aggregate(sort_array(collect_list(struct(h, c)), false), "
-        "struct(CAST(0 AS BIGINT) AS cum, CAST(0 AS BIGINT) AS best), "
-        "(acc, x) -> struct(acc.cum + x.c, "
-        "greatest(acc.best, least(x.h, acc.cum + x.c))), "
-        "acc -> acc.best)"
     )
     rounds_run = 0
     for _ in range(max_rounds):
@@ -853,12 +1011,11 @@ def kcore_converged(
         hist = msgs.groupBy("node", "h").agg(
             F.count("*").cast("bigint").alias("c")
         )
-        new_vals = hist.groupBy("node").agg(hindex.alias("h"))
+        new_vals = hist.groupBy("node").agg(F.expr(_HINDEX).alias("h"))
         rounds_run += 1
         if rounds_run < min_rounds:
-            # probe-free prefix: fixed-round shape. The LAST skip round
-            # still lands so the first probe joins checkpointed inputs
-            # instead of re-deriving the prefix lineage.
+            # unprobed prefix: the LAST skip round still lands so the
+            # first probe joins checkpointed inputs
             if rounds_run == min_rounds - 1 or (
                 ckpt_every and rounds_run % ckpt_every == 0
             ):
@@ -882,6 +1039,28 @@ def kcore_converged(
     return vals.select("node", F.col("h").alias("coreness")), rounds_run
 
 
+def _bfs_kernel(s, d, kind, rounds):
+    """Synchronous multi-source BFS over the tagged union of symmetric
+    edges (kind 0), seeds (kind 1) and null seeds (kind 2)."""
+    edge = kind == 0
+    seeds = s[kind == 1]
+    nodes = np.unique(np.concatenate([s[edge], seeds]))
+    si, di = np.searchsorted(nodes, s[edge]), np.searchsorted(nodes, d[edge])
+    far = np.iinfo(np.int64).max
+    hops = np.full(len(nodes), far)
+    hops[np.searchsorted(nodes, seeds)] = 0
+    for _ in range(rounds):
+        reached = hops[si] != far
+        offers = hops[si][reached] + 1
+        np.minimum.at(hops, di[reached], offers)
+    keep = hops != far
+    node, hops = nodes[keep], hops[keep]
+    if (kind == 2).any():
+        # the distributed min-fold keeps a null seed's (null, 0) row
+        node, hops = np.append(node.astype(object), None), np.append(hops, 0)
+    return {"node": node, "hops": hops}
+
+
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -903,26 +1082,40 @@ def bfs_distances(
     node at distance d is final once d <= rounds: later rounds can
     only re-offer larger values, which the min rejects). Nodes farther
     than ``rounds`` are absent from the result — the contract is
-    "distances within the horizon", the shape reachability audits
-    actually query.
+    "distances within the horizon". Every seed reports 0, including a
+    seed outside the graph and a null seed.
 
     Returns ``(node, hops)`` — BIGINT, hash-gateable.
 
-    Scale: per round ONE shuffle join (current distances x edges on
-    the source endpoint) + ONE map-side-combinable min per node;
-    distances carry (long, long) pairs only. The frontier is not
-    delta-tracked (a production BSP engine would expand only last
-    round's new nodes); at fixed small ``rounds`` the full-table join
-    is at most ``rounds`` x the delta version's work and keeps the
-    recurrence engine-replayable. Lineage truncates every
-    ``ckpt_every`` rounds (no mid-loop action — the kcore rationale).
+    The undirected edge set lands once and is counted in the same job.
+    Below ``SMALL_GRAPH_EDGES`` edges the edges and the seeds travel as
+    one tagged union into one task inside the caller's action
+    (q_bfs_distances on 4 cores, alternating A/B medians, distributed ->
+    one task: 0.89 -> 0.57 s at sf0.001, 1.59 -> 1.11 s at sf0.1). Above
+    it each round is ONE
+    shuffle join (current distances x edges on the source endpoint) +
+    ONE map-side-combinable min per node over (long, long) pairs; the
+    frontier is not delta-tracked (at fixed small ``rounds`` the
+    full-table join is at most ``rounds`` x the delta version's work),
+    and lineage truncates every ``ckpt_every`` rounds.
     """
-    und = (
-        _symmetrized(edges, src, dst)
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und, n_edges = _undirected(edges, src, dst)
+    if n_edges < SMALL_GRAPH_EDGES:
+        seed = F.col(id_col)
+        tagged = und.select("_s", "_d", F.lit(0).alias("_k")).unionByName(
+            sources.select(
+                F.coalesce(seed, F.lit(0)).alias("_s"),
+                F.coalesce(seed, F.lit(0)).alias("_d"),
+                F.when(seed.isNull(), 2).otherwise(1).alias("_k"),
+            )
+        )
+        schema = StructType([
+            StructField("node", tagged.schema["_s"].dataType),
+            StructField("hops", LongType()),
+        ])
+        return _one_task(
+            tagged, schema, lambda s, d, k: _bfs_kernel(s, d, k, rounds)
+        )
     dist = sources.select(
         F.col(id_col).alias("node"), F.lit(0).cast("bigint").alias("hops")
     ).distinct()

@@ -7136,9 +7136,9 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     points in both engines, so the iterative result is hash-gateable —
     double-accumulated PR would be partial-sum-order dependent. Edge
     generation avoids the within-order self-join (per-order sorted part
-    array -> pair expansion, order sizes bounded); each iteration is a
-    rank-to-edges join + destination-keyed sum, 2 exchanges of (node,
-    long) pairs per round, plan-only (no driver actions)."""
+    array -> pair expansion, order sizes bounded). The loop takes
+    graph.pagerank_fixed_point's one-task path below SMALL_GRAPH_EDGES
+    edges, and its per-round join + destination-keyed sum above it."""
     from asterlake.operators.graph import pagerank_fixed_point
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -7177,6 +7177,38 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("_e")
     ).select("_e.src", "_e.dst")
     return pagerank_fixed_point(edges, iters=5)
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str, min_qty: int) -> DataFrame:
+    """Part pairs ``(p1, p2)``, ``p1 < p2``, bought in one order with
+    ``l_quantity >= min_qty``: the co-purchase graph's undirected edges.
+    Per order, the sorted distinct part array expands to its pairs
+    (order sizes are bounded), so there is no within-order self-join;
+    ``collect_set`` dedupes within the order, so no upstream
+    ``.distinct()``."""
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_quantity") >= min_qty)
+        .select("l_orderkey", "l_partkey")
+    )
+    grouped = (
+        li.groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("_ps"))
+        .filter(F.size("_ps") >= 2)
+    )
+    return grouped.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    F.col("_ps"),
+                    lambda x, i: F.transform(
+                        F.slice(F.col("_ps"), i + F.lit(2), F.size("_ps")),
+                        lambda y: F.struct(x.alias("p1"), y.alias("p2")),
+                    ),
+                )
+            )
+        ).alias("_e")
+    ).select("_e.p1", "_e.p2")
 
 
 _TRIANGLES_ORACLE = """
@@ -7224,29 +7256,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream is ~20x larger for the same operator coverage."""
     from asterlake.operators.graph import triangle_counts
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 25)
-        .select("l_orderkey", "l_partkey")
-    )
-    grouped = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("_ps"))
-        .filter(F.size("_ps") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("_ps"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("_ps"), i + F.lit(2), F.size("_ps")),
-                        lambda y: F.struct(x.alias("p1"), y.alias("p2")),
-                    ),
-                )
-            )
-        ).alias("_e")
-    ).select("_e.p1", "_e.p2")
+    pairs = _copurchase_pairs(spark, sf_dir, min_qty=25)
     tc = triangle_counts(pairs, src="p1", dst="p2")
     return tc.filter(F.col("degree") >= 2).select(
         F.col("node").alias("part_id"),
@@ -7295,34 +7305,14 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     label propagation (Raghavan et al. 2007), determinized: 3 fixed
     rounds, most-frequent-neighbor label with the smallest-label tie
     rule (the classic random tie-break is useless under a cross-engine
-    hash gate). Each round is one shuffle join + two map-side-combinable
-    aggregates of (long, long) pairs — the per-node argmax is a
-    combinable max over struct(count, -label), never a window."""
+    hash gate). Distributed (at or above graph.SMALL_GRAPH_EDGES edges),
+    each round is one shuffle join + two map-side-combinable aggregates
+    of (long, long) pairs — the per-node argmax is a combinable max over
+    struct(count, -label), never a window; below it the rounds run in
+    one task."""
     from asterlake.operators.graph import label_propagation
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 25)
-        .select("l_orderkey", "l_partkey")
-    )
-    grouped = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("_ps"))
-        .filter(F.size("_ps") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("_ps"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("_ps"), i + F.lit(2), F.size("_ps")),
-                        lambda y: F.struct(x.alias("p1"), y.alias("p2")),
-                    ),
-                )
-            )
-        ).alias("_e")
-    ).select("_e.p1", "_e.p2")
+    pairs = _copurchase_pairs(spark, sf_dir, min_qty=25)
     return label_propagation(pairs, iters=3, src="p1", dst="p2").select(
         F.col("node").alias("part_id"), "community"
     )
@@ -7374,36 +7364,14 @@ def q_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameter's job and is differentially pinned in
     tests/test_winnow_triangles.py. Fixed rounds, not a convergence
     test, so the recurrence is engine-replayable (the
-    q_label_propagation discipline). Per round: ONE shuffle join + ONE
-    combinable (node, value) histogram; the per-node H-index is a
-    JVM-side fold over the sorted histogram — no window, and after
-    round one a hub's histogram is bounded by the coreness range, not
-    its degree. All-BIGINT, hash-gateable."""
+    q_label_propagation discipline). Distributed, per round: ONE
+    shuffle join + ONE combinable (node, value) histogram; the per-node
+    H-index is a JVM-side fold over the sorted histogram — no window.
+    Below graph.SMALL_GRAPH_EDGES edges the rounds run in one task.
+    All-BIGINT, hash-gateable."""
     from asterlake.operators.graph import kcore_decomposition
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 25)
-        .select("l_orderkey", "l_partkey")
-    )
-    grouped = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("_ps"))
-        .filter(F.size("_ps") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("_ps"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("_ps"), i + F.lit(2), F.size("_ps")),
-                        lambda y: F.struct(x.alias("p1"), y.alias("p2")),
-                    ),
-                )
-            )
-        ).alias("_e")
-    ).select("_e.p1", "_e.p2")
+    pairs = _copurchase_pairs(spark, sf_dir, min_qty=25)
     return kcore_decomposition(pairs, rounds=6, src="p1", dst="p2").select(
         F.col("node").alias("part_id"), "coreness"
     )
@@ -7474,34 +7442,13 @@ def q_kcore_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint are stationary, so oracle-vs-engine equality is depth-
     independent as long as unroll >= convergence, which the engine
     ASSERTS (a deeper-than-14 convergence raises rather than silently
-    hash-mismatching). Per round: ONE shuffle join + ONE combinable
-    histogram + the JVM-side H-index fold, plus the node-sized
-    short-circuit change probe the convergence gate costs."""
+    hash-mismatching). Below graph.SMALL_GRAPH_EDGES edges the whole
+    loop runs in one task; above it each round is ONE shuffle join +
+    ONE combinable histogram + the JVM-side H-index fold, plus the
+    node-sized short-circuit change probe the convergence gate costs."""
     from asterlake.operators.graph import kcore_converged
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 45)
-        .select("l_orderkey", "l_partkey")
-    )
-    grouped = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("_ps"))
-        .filter(F.size("_ps") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("_ps"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("_ps"), i + F.lit(2), F.size("_ps")),
-                        lambda y: F.struct(x.alias("p1"), y.alias("p2")),
-                    ),
-                )
-            )
-        ).alias("_e")
-    ).select("_e.p1", "_e.p2")
+    pairs = _copurchase_pairs(spark, sf_dir, min_qty=45)
     # min_rounds=5: the measured convergence depth never dips below 5
     # on this graph family (5/8/10 at sf0.001/0.01/0.1), so the first
     # four rounds run probe-free in the cheap fixed-round shape —
@@ -11440,34 +11387,13 @@ def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius primitive next to closure, PageRank, triangles, LPA and
     k-core. Fixed synchronous rounds (the kcore/q_label_propagation
     engine-replayable discipline — the oracle unrolls the recurrence
-    as chained CTEs); per round ONE shuffle join + ONE combinable min
-    over (long, long) pairs, lineage truncated every 3 rounds.
+    as chained CTEs). Distributed, per round ONE shuffle join + ONE
+    combinable min over (long, long) pairs; below
+    graph.SMALL_GRAPH_EDGES edges the rounds run in one task.
     All-BIGINT, hash-gateable."""
     from asterlake.operators.graph import bfs_distances
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 45)
-        .select("l_orderkey", "l_partkey")
-    )
-    grouped = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("_ps"))
-        .filter(F.size("_ps") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("_ps"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("_ps"), i + F.lit(2), F.size("_ps")),
-                        lambda y: F.struct(x.alias("p1"), y.alias("p2")),
-                    ),
-                )
-            )
-        ).alias("_e")
-    ).select("_e.p1", "_e.p2")
+    pairs = _copurchase_pairs(spark, sf_dir, min_qty=45)
     seeds = (
         pairs.select(
             F.explode(F.array(F.col("p1"), F.col("p2"))).alias("node")

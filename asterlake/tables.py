@@ -71,7 +71,8 @@ def events_read_schema(spark: SparkSession, sf_dir: str):
 # computes from the parquet inputs, nothing is persisted, and a
 # restarted SparkContext misses the key (applicationId). This is the
 # standard production shape — tables are registered once per session,
-# not re-resolved per query.
+# not re-resolved per query. It never invalidates: the engine never
+# writes into an sf_dir table (pinned by tests/test_tables_contract.py).
 _HANDLE_CACHE: dict = {}
 
 

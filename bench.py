@@ -109,9 +109,9 @@ def main() -> None:
             )
             .write.format("noop").mode("overwrite").save()
         )
-        # ... and the PageRank iteration classes: a 2-round run on a
-        # synthetic graph compiles the per-round join/sum generated
-        # classes and the localCheckpoint machinery once
+        # ... and the graph loops: a 2-round PageRank on a synthetic
+        # graph below graph.SMALL_GRAPH_EDGES starts the Python worker
+        # and the one-task mapInPandas path once
         from asterlake.operators.graph import pagerank_fixed_point
 
         _edges = spark.range(200).select(
@@ -122,8 +122,8 @@ def main() -> None:
             "overwrite"
         ).save()
         # ... and the static-graph classes on the same synthetic frame:
-        # triangle_counts' orientation/wedge joins and
-        # label_propagation's per-round join + argmax
+        # triangle_counts' orientation/wedge joins, plus
+        # label_propagation's landing of the undirected edge set
         from asterlake.operators.graph import (
             label_propagation,
             triangle_counts,

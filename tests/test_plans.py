@@ -934,16 +934,30 @@ def test_ohlc_bars_single_exchange_no_window(spark):
     assert set(scan.read_columns) == {"user_id", "event_id", "ts", "value"}
 
 
-def test_label_propagation_combinable_argmax_no_window(spark):
+def test_label_propagation_combinable_argmax_no_window(spark, monkeypatch):
     """q_label_propagation at 100 TB: the per-node label argmax is a
     map-side-combinable max over struct(count, -label) — no Window node
     anywhere; rounds land as checkpointed RDDs; no cartesian, no
-    Python; shuffles carry only (long, long) pairs."""
+    Python; shuffles carry only (long, long) pairs. sf0.001 is below
+    the one-task threshold, so the distributed path is forced."""
+    from asterlake.operators import graph
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
     plan = _plan(spark, "q_label_propagation")
     assert not has_node(plan, "Window")
     assert not has_node(plan, "CartesianProduct")
     assert not has_node(plan, "BatchEvalPython")
     assert has_node(plan, "ExistingRDD")
+
+
+def test_label_propagation_small_graph_one_task(spark):
+    """q_label_propagation below the one-task threshold (sf0.001): the
+    landed edges feed exactly one MapInPandas through a narrow
+    coalesce — no Exchange anywhere above the checkpointed RDD."""
+    plan = _plan(spark, "q_label_propagation")
+    assert node_count(plan, "MapInPandas") == 1
+    assert has_node(plan, "ExistingRDD")
+    assert not has_node(plan, "Exchange")
 
 
 def test_golden_record_combinable_survivorship_no_window(spark):

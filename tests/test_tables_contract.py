@@ -143,3 +143,44 @@ def test_fan_out_small_scan_spreads_and_noops(spark, tmp_path):
         assert fan_out_small_scan(small) is small
     finally:
         spark.conf.set(key, prev)
+
+
+def test_engine_writes_never_touch_sf_dir_tables(spark, tmp_path):
+    """load_table caches handles and never invalidates them, which is
+    sound only while no engine write lands in an sf_dir table. Run the
+    queries that write — q_stream_cdc_apply stages its change waves with
+    ``.write.parquet``, the memory-sink drains write checkpoints beside
+    symlinked sources — over a private copy of sf0.001: the copy's files
+    are unchanged, and the cached handles still read the same rows as a
+    fresh uncached read."""
+    import shutil
+
+    from asterlake.queries import QUERIES
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+
+    def files():
+        return {
+            (str(p.relative_to(sf)), p.stat().st_size, p.stat().st_mtime_ns)
+            for p in sf.rglob("*")
+        }
+
+    before = files()
+    handles = {t: load_table(spark, str(sf), t) for t in ("orders", "events")}
+    for name in (
+        "q_stream_cdc_apply",
+        "q_stream_quarantine",
+        "q_stream_windowed_counts",
+    ):
+        QUERIES[name].spark(spark, str(sf)).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    assert files() == before
+    for table, cached in handles.items():
+        assert load_table(spark, str(sf), table) is cached
+        fresh = spark.read.parquet(str(sf / f"{table}.parquet"))
+        if table == "events":
+            fresh = normalize_events_ts(fresh)
+        assert cached.exceptAll(fresh).count() == 0
+        assert fresh.exceptAll(cached).count() == 0
