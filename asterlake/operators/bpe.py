@@ -71,10 +71,14 @@ def _initial_symbols(word: Column) -> Column:
     )
 
 
-def _merge_fold(symbols: Column, a: str, b: str) -> Column:
-    """Greedy leftmost-first merge of adjacent (a, b) into a+b — a pure
-    JVM-side left-to-right fold building the new symbol array."""
-    merged = F.lit(a + b)
+# Rounds a trainer runs between landings of its symbol state: the
+# merge folds stack one per round, and a landing truncates the lineage.
+_CHECKPOINT_EVERY = 8
+
+
+def _merge_fold(symbols: Column, a: str, b: str, merged: str) -> Column:
+    """Greedy leftmost-first merge of adjacent (a, b) into ``merged`` — a
+    pure JVM-side left-to-right fold building the new symbol array."""
     return F.aggregate(
         symbols,
         F.array().cast(T.ArrayType(T.StringType())),
@@ -83,16 +87,31 @@ def _merge_fold(symbols: Column, a: str, b: str) -> Column:
             & (F.element_at(acc, -1) == F.lit(a))
             & (x == F.lit(b)),
             F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
+                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
             ),
         ).otherwise(F.concat(acc, F.array(x))),
+    )
+
+
+def _adjacent_pairs(state: DataFrame) -> DataFrame:
+    """Every adjacent symbol pair ``(a, b)`` of ``syms`` with its word's
+    count ``n``."""
+    return state.select(
+        F.posexplode(F.slice("syms", 1, F.size("syms") - 1)).alias(
+            "i", "a"
+        ),
+        F.col("syms"),
+        F.col("n"),
+    ).select(
+        "a",
+        F.element_at("syms", F.col("i") + 2).alias("b"),
+        "n",
     )
 
 
 def bpe_train(
     words: DataFrame,
     n_merges: int = 50,
-    checkpoint_every: int = 8,
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merge rules from a ``(word, n)`` table.
 
@@ -112,19 +131,9 @@ def bpe_train(
     ).localCheckpoint()
     merges: list[tuple[str, str]] = []
     for i in range(n_merges):
-        pairs = state.select(
-            F.posexplode(F.slice("syms", 1, F.size("syms") - 1)).alias(
-                "i", "a"
-            ),
-            F.col("syms"),
-            F.col("n"),
-        ).select(
-            "a",
-            F.element_at("syms", F.col("i") + 2).alias("b"),
-            "n",
-        )
         top = (
-            pairs.groupBy("a", "b")
+            _adjacent_pairs(state)
+            .groupBy("a", "b")
             .agg(F.sum("n").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
             .limit(1)
@@ -135,9 +144,9 @@ def bpe_train(
         a, b = top[0].a, top[0].b
         merges.append((a, b))
         state = state.select(
-            _merge_fold(F.col("syms"), a, b).alias("syms"), "n"
+            _merge_fold(F.col("syms"), a, b, a + b).alias("syms"), "n"
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % _CHECKPOINT_EVERY == 0:
             # truncate the fold-on-fold lineage (the graph.py discipline)
             state = state.localCheckpoint()
     return merges

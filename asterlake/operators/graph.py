@@ -33,6 +33,16 @@ Connected components stays distributed at every size: its dedup graphs
 are near-cliques that converge in 2-3 rounds, so a one-task path has
 few round jobs to remove.
 
+Every distributed loop except the star connected-components variant is
+a step function run by one round driver, :func:`_drive`. The driver
+pins ``spark.sql.shuffle.partitions`` to the count its caller sizes for
+the loop. It lands the state every ``_LAND_EVERY`` rounds and after the
+last, so every round runs under the pin. A convergence-gated loop
+probes its rounds: the step adds the columns a probe aggregate reads,
+the aggregate rides that round's landing job as an ``Observation``, and
+the loop stops once it is at most the tolerance. Every probed round
+lands, and a probed round costs one action.
+
 Connected components algorithm: min-label propagation. Every vertex
 starts labeled with its own id; each round every vertex takes the min of
 its label and its neighbors' labels; converged when no label changes.
@@ -83,12 +93,51 @@ _HINDEX = (
     "acc -> acc.best)"
 )
 
+# Rounds a fixed-round distributed loop runs between landings. Un-landed
+# rounds dedup through ReusedExchange; a landing bounds the plan depth.
+_LAND_EVERY = 3
+
 
 def _land(df: DataFrame) -> tuple[DataFrame, int]:
     """``localCheckpoint`` ``df`` and count its rows in the same job."""
     obs = Observation()
     landed = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
     return landed, obs.get["n"]
+
+
+def _parallel_parts(spark) -> int:
+    """Shuffle partitions for a node-keyed loop, sized to the parallelism."""
+    return max(4, min(256, spark.sparkContext.defaultParallelism))
+
+
+def _drive(state, step, rounds, parts, probe=None, tol=0, first_probe=1):
+    """Run up to ``rounds`` rounds of ``step`` with
+    ``spark.sql.shuffle.partitions`` pinned to ``parts``.
+
+    ``step(state, probed)`` returns the next state. With a ``probe``
+    aggregate, rounds from ``first_probe`` on are probed: the step adds
+    the columns ``probe`` reads, the value rides the round's landing job
+    as an ``Observation``, those columns are dropped, and the loop stops
+    once the value is at most ``tol`` (a null never stops it). The state
+    lands on probed rounds, every ``_LAND_EVERY`` rounds and after the
+    last. Returns ``(state, rounds_run, converged)``."""
+    cols = state.columns
+    rounds_run, converged = 0, False
+    pin = {"spark.sql.shuffle.partitions": str(parts)}
+    with pinned_conf(state.sparkSession, pin):
+        while rounds_run < rounds and not converged:
+            rounds_run += 1
+            probed = probe is not None and rounds_run >= first_probe
+            state = step(state, probed)
+            if probed:
+                obs = Observation()
+                state = state.observe(obs, probe.alias("probe")).select(*cols)
+            if probed or rounds_run % _LAND_EVERY == 0 or rounds_run == rounds:
+                state = state.localCheckpoint()
+            if probed:
+                value = obs.get["probe"]
+                converged = value is not None and value <= tol
+    return state, rounds_run, converged
 
 
 def _one_task(df: DataFrame, schema: StructType, kernel) -> DataFrame:
@@ -174,9 +223,9 @@ def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 
 def _warn_not_converged(method: str, max_iter: int) -> None:
-    """Round-3 advice: exhausting max_iter without reaching the fixpoint
-    means labels can silently span a component not fully merged (e.g. a
-    chain longer than max_iter under propagation). Loud, not silent."""
+    """Exhausting max_iter without reaching the fixpoint means labels
+    can silently span a component not fully merged (e.g. a chain longer
+    than max_iter under propagation). Loud, not silent."""
     warnings.warn(
         f"connected_components({method=}) stopped at max_iter={max_iter} "
         "WITHOUT converging — component labels may be incomplete. Raise "
@@ -219,71 +268,42 @@ def connected_components(
     if method != "propagation":
         raise ValueError(f"unknown method {method!r}")
 
-    # Pin both iteration inputs (landing zones) and size the loop's
-    # shuffle-partition conf to the edge count, independent of the
-    # session conf: the dup-candidate graph is tiny relative to the
-    # corpus, and without the loop-scoped `parts` each round pays
-    # (conf partitions x stages) of task overhead in sessions tuned for
-    # the full-corpus scans. r14: the former repartition(parts, key) +
-    # SECOND localCheckpoint on each input is gone — localCheckpoint
-    # does not preserve outputPartitioning under AQE (the checkpointed
-    # scan reports UnknownPartitioning and every per-round join
-    # re-exchanges its inputs regardless, measured in the r14 plan
-    # capture), so those repartitions bought nothing and cost one full
-    # extra landing job + exchange per input. Values are partitioning-
-    # independent either way.
-    und = und.localCheckpoint()
-    n_edges = und.count()
+    # Land both iteration inputs and size the loop's shuffle partitions
+    # to the edge count, independent of the session conf: the
+    # dup-candidate graph is tiny relative to the corpus, and without
+    # the loop-scoped `parts` each round pays (conf partitions x stages)
+    # of task overhead in sessions tuned for the full-corpus scans. No
+    # repartition(parts, key) before landing: localCheckpoint does not
+    # preserve outputPartitioning under AQE, so every per-round join
+    # re-exchanges its inputs regardless.
+    und, n_edges = _land(und)
     parts = max(4, min(256, n_edges // 50_000 + 4))
     labels = (
         vertices.select(F.col(id_col), F.col(id_col).alias("component"))
         .localCheckpoint()
     )
 
-    spark = edges.sparkSession
-    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
-        for _ in range(max_iter):
-            # each vertex's best neighbor label this round; the groupBy is
-            # the round's single exchange (at `parts`, matching the pinned
-            # inputs, so both joins are co-partitioned)
-            nbr_min = (
-                und.join(labels, und["_d"] == labels[id_col])
-                .groupBy("_s")
-                .agg(F.min("component").alias("_nbr"))
-            )
-            # the convergence check RIDES the checkpoint job via an
-            # Observation (the versioned.py write-action pattern): one
-            # job per round instead of checkpoint + a second changed-
-            # count job — iteration overhead is the dominant cost of
-            # this loop on dedup-sized graphs (r11; measured ~2 jobs ->
-            # 1 per round across the whole closure family)
-            obs = Observation()
-            labels = (
-                labels.join(nbr_min, labels[id_col] == nbr_min["_s"], "left")
-                .select(
-                    F.col(id_col),
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("_nbr"), F.col("component")),
-                    ).alias("component"),
-                    (
-                        F.coalesce(F.col("_nbr"), F.col("component"))
-                        < F.col("component")
-                    ).alias("_changed"),
-                )
-                .observe(
-                    obs,
-                    F.coalesce(
-                        F.sum(F.col("_changed").cast("long")), F.lit(0)
-                    ).alias("n_changed"),
-                )
-                .drop("_changed")
-                .localCheckpoint()
-            )
-            if obs.get["n_changed"] == 0:
-                break
-        else:
-            _warn_not_converged("propagation", max_iter)
+    def step(labels, probed):
+        # each vertex's best neighbor label this round; the groupBy is
+        # the round's single exchange
+        nbr_min = (
+            und.join(labels, und["_d"] == labels[id_col])
+            .groupBy("_s")
+            .agg(F.min("component").alias("_nbr"))
+        )
+        nbr = F.coalesce(F.col("_nbr"), F.col("component"))
+        return labels.join(
+            nbr_min, labels[id_col] == nbr_min["_s"], "left"
+        ).select(
+            F.col(id_col),
+            F.least(F.col("component"), nbr).alias("component"),
+            (nbr < F.col("component")).alias("_changed"),
+        )
+
+    changed = F.coalesce(F.sum(F.col("_changed").cast("long")), F.lit(0))
+    labels, _, converged = _drive(labels, step, max_iter, parts, changed)
+    if not converged:
+        _warn_not_converged("propagation", max_iter)
     return labels
 
 
@@ -400,11 +420,10 @@ def pagerank_converged(
     Because the arithmetic is exact integers, the gate is deterministic —
     no float-noise flapping around the threshold; ``tol_fp=0`` stops
     exactly at the integer fixpoint. The result is landed before
-    returning on both paths: the distributed loop probes max-|delta| with
-    one node-sized aggregate per round, and the one-task path brings its
-    rounds and converged flag back with the landing job. A run that hits
-    ``max_iter`` without converging warns on the driver, as does an empty
-    graph (its delta is undefined)."""
+    returning on both paths: the distributed loop's max-|delta| and the
+    one-task path's rounds and converged flag come back with the landing
+    job. A run that hits ``max_iter`` without converging warns on the
+    driver, as does an empty graph (its delta is undefined)."""
     return _pagerank_loop(
         edges, src, dst, max_iter, damping_num, damping_den, scale,
         tol_fp=tol_fp,
@@ -419,7 +438,6 @@ def pagerank_fixed_point(
     damping_num: int = 17,
     damping_den: int = 20,
     scale: int = 1_000_000_000_000,
-    ckpt_every: int = 3,
 ) -> DataFrame:
     """PageRank with a FIXED iteration count in pure BIGINT fixed-point —
     deterministic across engines and partition orders, so the result is
@@ -441,16 +459,13 @@ def pagerank_fixed_point(
     job). Below ``SMALL_GRAPH_EDGES`` edges the ``iters`` rounds run in
     one task inside the caller's action. Above it each round is one join
     of ranks to the degree-attached edges on the source key and one sum
-    keyed on the destination; the rank table lands every ``ckpt_every``
-    rounds and after the last, which keeps the plan depth bounded while
-    sparing a landing job per round (values identical at any cadence).
+    keyed on the destination.
     Measured for q_pagerank_copurchase on 4 cores (alternating
     in-session A/B, medians, distributed -> one task): 2.19 -> 0.55 s
     at sf0.001, 7.90 -> 4.14 s at sf0.1 (2.4M edges).
     """
     pr, _ = _pagerank_loop(
-        edges, src, dst, iters, damping_num, damping_den, scale,
-        tol_fp=None, ckpt_every=ckpt_every,
+        edges, src, dst, iters, damping_num, damping_den, scale, tol_fp=None
     )
     return pr
 
@@ -495,18 +510,12 @@ def _pagerank_loop(
     damping_den: int,
     scale: int,
     tol_fp: int | None,
-    ckpt_every: int = 1,
 ) -> tuple[DataFrame, int]:
     e, n_edges = _land(edges.select(src, dst))
-    if n_edges < SMALL_GRAPH_EDGES:
-        pr, rounds, converged = _pagerank_one_task(
-            e, src, dst, iters, damping_num, damping_den, scale, tol_fp
-        )
-    else:
-        pr, rounds, converged = _pagerank_rounds(
-            e, src, dst, iters, damping_num, damping_den, scale, tol_fp,
-            ckpt_every,
-        )
+    loop = _pagerank_one_task if n_edges < SMALL_GRAPH_EDGES else _pagerank_rounds
+    pr, rounds, converged = loop(
+        e, src, dst, iters, damping_num, damping_den, scale, tol_fp
+    )
     if tol_fp is not None and not converged:
         warnings.warn(
             f"pagerank_converged: max_iter={iters} reached with "
@@ -541,15 +550,12 @@ def _pagerank_one_task(e, src, dst, iters, damping_num, damping_den, scale, tol_
     return _one_task_converged(inputs, schema, kernel)
 
 
-def _pagerank_rounds(
-    edges, src, dst, iters, damping_num, damping_den, scale, tol_fp, ckpt_every
-):
+def _pagerank_rounds(edges, src, dst, iters, damping_num, damping_den, scale, tol_fp):
     # Pin both iteration inputs to one explicit hash partitioning sized
     # to the parallelism: edges on the probe key and ranks on the node
     # key at the SAME count make the per-round join exchange-free; each
     # round's only shuffle is the destination-keyed sum.
-    spark = edges.sparkSession
-    parts = max(4, min(256, spark.sparkContext.defaultParallelism))
+    parts = _parallel_parts(edges.sparkSession)
     # Degree via aggregate + shuffle-hash join, NOT a window: the window
     # form sorts the full edge set within partitions (measured 6.0s of a
     # 6.6s sf0.1 run on 2.4M edges); the aggregate is map-side
@@ -578,66 +584,39 @@ def _pagerank_rounds(
         .repartition(parts, "node")
         .localCheckpoint()
     )
-    base_expr = (
-        f"(CAST({(damping_den - damping_num) * scale} AS BIGINT) "
-        f"DIV {damping_den}) DIV _n"
-    )
-    rounds = 0
-    converged = False
-    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
-        for _i in range(iters):
-            # shuffle-hash hint: co-partitioned inputs make the join
-            # exchange-free and skip re-sorting the edge blocks
-            contrib = working.join(
-                pr.hint("shuffle_hash"), working[src] == pr["node"]
-            ).select(
-                working[dst].alias("_to"),
-                F.expr("pr DIV _deg").alias("_c"),
-            )
-            sums = contrib.groupBy("_to").agg(
-                F.sum("_c").cast("bigint").alias("_s")
-            )
-            prev_pr = pr
-            pr = (
-                pr.join(sums, pr["node"] == sums["_to"], "left")
-                .crossJoin(F.broadcast(n_nodes))
-                .select(
-                    F.col("node"),
-                    (
-                        F.expr(base_expr)
-                        + F.expr(
-                            f"({damping_num} * coalesce(_s,"
-                            f" CAST(0 AS BIGINT))) DIV {damping_den}"
-                        )
-                    )
-                    .cast("bigint")
-                    .alias("pr"),
-                )
-            )
-            rounds += 1
-            # The fixed-count variant runs no mid-loop action, so it
-            # lands every ``ckpt_every`` rounds (un-landed rounds dedup
-            # through ReusedExchange). The final round always lands, so
-            # it executes while the shuffle-partition pin is in force.
-            # The convergence-gated variant lands every round: its delta
-            # probe is an action over both pr and prev_pr.
-            if (
-                tol_fp is not None
-                or rounds % max(ckpt_every, 1) == 0
-                or rounds == iters
-            ):
-                pr = pr.localCheckpoint()
-            if tol_fp is not None:
-                # exact integer max-|delta| over co-partitioned ranks
-                delta = (
-                    prev_pr.withColumnRenamed("pr", "_pr_old")
-                    .join(pr.hint("shuffle_hash"), "node")
-                    .agg(F.max(F.abs(F.col("pr") - F.col("_pr_old"))))
-                    .collect()[0][0]  # driver-ok: one scalar per round
-                )
-                if delta is not None and delta <= tol_fp:
-                    converged = True
-                    break
+    new_pr = (
+        F.expr(
+            f"(CAST({(damping_den - damping_num) * scale} AS BIGINT) "
+            f"DIV {damping_den}) DIV _n"
+        )
+        + F.expr(
+            f"({damping_num} * coalesce(_s, CAST(0 AS BIGINT))) DIV {damping_den}"
+        )
+    ).cast("bigint")
+
+    def step(pr, probed):
+        # shuffle-hash hint: co-partitioned inputs make the join
+        # exchange-free and skip re-sorting the edge blocks
+        contrib = working.join(
+            pr.hint("shuffle_hash"), working[src] == pr["node"]
+        ).select(
+            working[dst].alias("_to"),
+            F.expr("pr DIV _deg").alias("_c"),
+        )
+        sums = contrib.groupBy("_to").agg(
+            F.sum("_c").cast("bigint").alias("_s")
+        )
+        cols = [F.col("node"), new_pr.alias("pr")]
+        if probed:  # the old rank is in scope: exact integer |delta|
+            cols.append(F.abs(new_pr - F.col("pr")).alias("_delta"))
+        return (
+            pr.join(sums, pr["node"] == sums["_to"], "left")
+            .crossJoin(F.broadcast(n_nodes))
+            .select(*cols)
+        )
+
+    probe = None if tol_fp is None else F.max("_delta")
+    pr, rounds, converged = _drive(pr, step, iters, parts, probe, tol_fp)
     return (
         pr.select(F.col("node"), F.col("pr").alias("pagerank_fp")),
         rounds,
@@ -798,50 +777,48 @@ def label_propagation(
     otherwise broadcast-convert the node-sized label table every round,
     and at 100 TB it cannot broadcast) and the (node, label) count and
     the argmax (max over struct(count, -label) — never a per-node window)
-    stack on ONE explicit node-keyed exchange; every round lands, and the
-    loop pins ``spark.sql.shuffle.partitions`` to the parallelism-derived
-    ``parts``. Labels are node ids (longs); no payloads in any shuffle.
+    stack on ONE explicit node-keyed exchange. Labels are node ids
+    (longs); no payloads in any shuffle.
     """
-    spark = edges.sparkSession
-    parts = max(4, min(256, spark.sparkContext.defaultParallelism))
-    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
-        und, n_edges = _undirected(edges, src, dst)
-        if n_edges < SMALL_GRAPH_EDGES:
-            node = und.schema["_s"].dataType
-            schema = StructType(
-                [StructField("node", node), StructField("community", node)]
-            )
-            return _one_task(und, schema, lambda s, d: _lpa_kernel(s, d, iters))
-        labels = (
-            und.select(F.col("_s").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("lab"))
-            .localCheckpoint()
+    und, n_edges = _undirected(edges, src, dst)
+    if n_edges < SMALL_GRAPH_EDGES:
+        node = und.schema["_s"].dataType
+        schema = StructType(
+            [StructField("node", node), StructField("community", node)]
         )
-        for _ in range(iters):
-            msgs = und.join(
-                labels.withColumnRenamed("node", "_s").hint("shuffle_hash"),
-                "_s",
-            ).select(F.col("_d").alias("node"), "lab")
-            # one node-keyed exchange serves BOTH aggregates below it
-            counts = (
-                msgs.repartition(parts, "node")
-                .groupBy("node", "lab")
-                .agg(F.count("*").cast("bigint").alias("c"))
+        return _one_task(und, schema, lambda s, d: _lpa_kernel(s, d, iters))
+    parts = _parallel_parts(edges.sparkSession)
+    labels = (
+        und.select(F.col("_s").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("lab"))
+    )
+
+    def step(labels, probed):
+        msgs = und.join(
+            labels.withColumnRenamed("node", "_s").hint("shuffle_hash"),
+            "_s",
+        ).select(F.col("_d").alias("node"), "lab")
+        # one node-keyed exchange serves BOTH aggregates below it
+        counts = (
+            msgs.repartition(parts, "node")
+            .groupBy("node", "lab")
+            .agg(F.count("*").cast("bigint").alias("c"))
+        )
+        # argmax (count DESC, label ASC) as a combinable max over
+        # struct(count, -label): ids are non-negative longs, so the
+        # negation order is exactly label-ascending on count ties
+        return (
+            counts.groupBy("node")
+            .agg(
+                F.max(
+                    F.struct(F.col("c"), (-F.col("lab")).alias("_nl"))
+                ).alias("_m")
             )
-            # argmax (count DESC, label ASC) as a combinable max over
-            # struct(count, -label): ids are non-negative longs, so the
-            # negation order is exactly label-ascending on count ties
-            labels = (
-                counts.groupBy("node")
-                .agg(
-                    F.max(
-                        F.struct(F.col("c"), (-F.col("lab")).alias("_nl"))
-                    ).alias("_m")
-                )
-                .select("node", (-F.col("_m._nl")).alias("lab"))
-                .localCheckpoint()
-            )
+            .select("node", (-F.col("_m._nl")).alias("lab"))
+        )
+
+    labels, _, _ = _drive(labels, step, iters, parts)
     return labels.select("node", F.col("lab").alias("community"))
 
 
@@ -875,12 +852,50 @@ def _kcore_schema(und: DataFrame) -> StructType:
     ])
 
 
+def _kcore_rounds(und: DataFrame, max_rounds: int, min_rounds: int):
+    """The distributed twin of :func:`_kcore_kernel`: the same rounds and
+    stop, returning ``(frame, rounds_run, converged)``.
+
+    Each round is ONE hinted shuffled-hash join (values x edges on the
+    source id; AQE would otherwise broadcast-convert the value table
+    every round, and at 100 TB it cannot broadcast) + ONE node-keyed
+    exchange under which the (node, value) histogram and the H-index
+    fold ``_HINDEX`` stack — no window, and after round one a hub's
+    histogram is bounded by the coreness range, not its degree. Probed
+    rounds also join the previous values and count the changed nodes."""
+    parts = _parallel_parts(und.sparkSession)
+    vals = und.groupBy(F.col("_s").alias("node")).agg(
+        F.count("*").cast("bigint").alias("h")
+    )
+
+    def step(vals, probed):
+        msgs = und.join(
+            vals.withColumnRenamed("node", "_s").hint("shuffle_hash"),
+            "_s",
+        ).select(F.col("_d").alias("node"), "h")
+        # one node-keyed exchange serves BOTH aggregates below it
+        hist = (
+            msgs.repartition(parts, "node")
+            .groupBy("node", "h")
+            .agg(F.count("*").cast("bigint").alias("c"))
+        )
+        new_vals = hist.groupBy("node").agg(F.expr(_HINDEX).alias("h"))
+        if probed:
+            return new_vals.join(vals.withColumnRenamed("h", "_h0"), "node")
+        return new_vals
+
+    changed = F.count_if(F.col("h") != F.col("_h0"))
+    vals, rounds_run, converged = _drive(
+        vals, step, max_rounds, parts, changed, first_probe=min_rounds
+    )
+    return vals.select("node", F.col("h").alias("coreness")), rounds_run, converged
+
+
 def kcore_decomposition(
     edges: DataFrame,
     rounds: int = 6,
     src: str = "src",
     dst: str = "dst",
-    ckpt_every: int = 3,
 ) -> DataFrame:
     """Coreness (k-core number) per node by synchronous H-index
     iteration — Lu, Zhou, Zhang & Stanley, "The H-index of a network
@@ -907,49 +922,18 @@ def kcore_decomposition(
 
     The undirected edge set lands once and is counted in the same job.
     Below ``SMALL_GRAPH_EDGES`` edges the rounds run in one task inside
-    the caller's action, on the kernel :func:`kcore_converged` shares
-    (q_kcore_decompose on 4 cores, alternating A/B medians, distributed
-    -> one task: 0.88 -> 0.39 s at sf0.001, 4.29 -> 1.91 s at sf0.1).
-    Above it each round is ONE hinted shuffled-hash join (values x edges
-    on the source id; AQE would otherwise broadcast-convert the value
-    table every round, and at 100 TB it cannot broadcast) + ONE
-    node-keyed exchange under which the (node, value) histogram and the
-    H-index fold ``_HINDEX`` stack — no window, and after round one a
-    hub's histogram is bounded by the coreness range, not its degree.
-    With no mid-loop action, values land every ``ckpt_every`` rounds and
-    after the last, so every round runs under the loop's
-    ``spark.sql.shuffle.partitions`` pin (values identical at any
-    cadence)."""
-    spark = edges.sparkSession
-    parts = max(4, min(256, spark.sparkContext.defaultParallelism))
-    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
-        und, n_edges = _undirected(edges, src, dst)
-        if n_edges < SMALL_GRAPH_EDGES:
-            return _one_task(
-                und,
-                _kcore_schema(und),
-                lambda s, d: _kcore_kernel(s, d, rounds, rounds + 1)[0],
-            )
-        vals = und.groupBy(F.col("_s").alias("node")).agg(
-            F.count("*").cast("bigint").alias("h")
+    the caller's action (q_kcore_decompose on 4 cores, alternating A/B
+    medians, distributed -> one task: 0.88 -> 0.39 s at sf0.001, 4.29 ->
+    1.91 s at sf0.1). Both paths are :func:`kcore_converged`'s loop with
+    probing off: the shared kernel and :func:`_kcore_rounds`."""
+    und, n_edges = _undirected(edges, src, dst)
+    if n_edges < SMALL_GRAPH_EDGES:
+        return _one_task(
+            und,
+            _kcore_schema(und),
+            lambda s, d: _kcore_kernel(s, d, rounds, rounds + 1)[0],
         )
-        for r in range(rounds):
-            msgs = und.join(
-                vals.withColumnRenamed("node", "_s").hint("shuffle_hash"),
-                "_s",
-            ).select(F.col("_d").alias("node"), "h")
-            # one node-keyed exchange serves BOTH aggregates below it
-            hist = (
-                msgs.repartition(parts, "node")
-                .groupBy("node", "h")
-                .agg(F.count("*").cast("bigint").alias("c"))
-            )
-            vals = hist.groupBy("node").agg(F.expr(_HINDEX).alias("h"))
-            if ckpt_every and (
-                (r + 1) % ckpt_every == 0 or r + 1 == rounds
-            ):
-                vals = vals.localCheckpoint()
-    return vals.select("node", F.col("h").alias("coreness"))
+    return _kcore_rounds(und, rounds, rounds + 1)[0]
 
 
 def kcore_converged(
@@ -958,7 +942,6 @@ def kcore_converged(
     dst: str = "dst",
     max_rounds: int = 64,
     min_rounds: int = 1,
-    ckpt_every: int = 3,
 ) -> "tuple[DataFrame, int]":
     """Convergence-EXACT twin of :func:`kcore_decomposition`: the same
     synchronous H-index recurrence (Lu et al., Nature Communications
@@ -970,8 +953,8 @@ def kcore_converged(
     stationary one; exactness is pinned against the Batagelj-Zaversnik
     peel in tests/test_winnow_triangles.py. The gate is deterministic —
     exact BIGINT values, no float flapping. A run that hits
-    ``max_rounds`` without converging warns on the driver, same contract
-    as connected_components.
+    ``max_rounds`` without converging warns on the driver
+    (``RuntimeWarning``).
 
     ``min_rounds``: rounds below it are not probed — for callers that
     KNOW a lower bound on the depth. Values are identical either way
@@ -984,10 +967,9 @@ def kcore_converged(
     4 cores, alternating A/B medians, distributed -> one task: 1.22 ->
     0.54 s at sf0.001, 4.72 -> 1.00 s at sf0.1),
     and its rounds and converged flag come back with the landing job.
-    Above it each round has the fixed-round variant's shape plus, on
-    probed rounds, a landing and a node-sized change probe
-    (``limit(1)`` short-circuits at the first changed node); unprobed
-    rounds land every ``ckpt_every`` rounds."""
+    Above it each round has the fixed-round variant's shape; a probed
+    round also joins the previous values, and its changed-node count
+    rides the round's landing job."""
     und, n_edges = _undirected(edges, src, dst)
     if n_edges < SMALL_GRAPH_EDGES:
         out, rounds_run, converged = _one_task_converged(
@@ -995,48 +977,17 @@ def kcore_converged(
             _kcore_schema(und),
             lambda s, d: _kcore_kernel(s, d, max_rounds, min_rounds),
         )
-        if not converged:
-            _warn_not_converged("h-index", max_rounds)
-        return out, rounds_run
-    vals = (
-        und.groupBy(F.col("_s").alias("node"))
-        .agg(F.count("*").cast("bigint").alias("h"))
-        .localCheckpoint()
-    )
-    rounds_run = 0
-    for _ in range(max_rounds):
-        msgs = und.join(
-            vals.withColumnRenamed("node", "_s"), "_s"
-        ).select(F.col("_d").alias("node"), "h")
-        hist = msgs.groupBy("node", "h").agg(
-            F.count("*").cast("bigint").alias("c")
+    else:
+        out, rounds_run, converged = _kcore_rounds(und, max_rounds, min_rounds)
+    if not converged:
+        warnings.warn(
+            f"kcore_converged (h-index) stopped at max_rounds={max_rounds} "
+            "WITHOUT converging — coreness values are upper bounds, not "
+            "exact. Raise max_rounds.",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        new_vals = hist.groupBy("node").agg(F.expr(_HINDEX).alias("h"))
-        rounds_run += 1
-        if rounds_run < min_rounds:
-            # unprobed prefix: the LAST skip round still lands so the
-            # first probe joins checkpointed inputs
-            if rounds_run == min_rounds - 1 or (
-                ckpt_every and rounds_run % ckpt_every == 0
-            ):
-                new_vals = new_vals.localCheckpoint()
-            vals = new_vals
-            continue
-        new_vals = new_vals.localCheckpoint()
-        changed = (
-            new_vals.withColumnRenamed("h", "_hn")
-            .join(vals, "node")
-            .filter(F.col("_hn") != F.col("h"))
-            .limit(1)
-            .count()
-        )
-        vals = new_vals
-        if changed == 0:
-            return vals.select("node", F.col("h").alias("coreness")), (
-                rounds_run
-            )
-    _warn_not_converged("h-index", max_rounds)
-    return vals.select("node", F.col("h").alias("coreness")), rounds_run
+    return out, rounds_run
 
 
 def _bfs_kernel(s, d, kind, rounds):
@@ -1068,7 +1019,6 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     id_col: str = "node",
-    ckpt_every: int = 3,
 ) -> DataFrame:
     """Multi-source BFS hop distances: for every node reachable from
     ``sources`` within ``rounds`` hops, the exact minimum hop count —
@@ -1092,12 +1042,11 @@ def bfs_distances(
     one tagged union into one task inside the caller's action
     (q_bfs_distances on 4 cores, alternating A/B medians, distributed ->
     one task: 0.89 -> 0.57 s at sf0.001, 1.59 -> 1.11 s at sf0.1). Above
-    it each round is ONE
-    shuffle join (current distances x edges on the source endpoint) +
-    ONE map-side-combinable min per node over (long, long) pairs; the
-    frontier is not delta-tracked (at fixed small ``rounds`` the
-    full-table join is at most ``rounds`` x the delta version's work),
-    and lineage truncates every ``ckpt_every`` rounds.
+    it each round is ONE shuffle join (current distances x edges on the
+    source endpoint) + ONE map-side-combinable min per node over
+    (long, long) pairs; the frontier is not delta-tracked (at fixed
+    small ``rounds`` the full-table join is at most ``rounds`` x the
+    delta version's work).
     """
     und, n_edges = _undirected(edges, src, dst)
     if n_edges < SMALL_GRAPH_EDGES:
@@ -1119,18 +1068,18 @@ def bfs_distances(
     dist = sources.select(
         F.col(id_col).alias("node"), F.lit(0).cast("bigint").alias("hops")
     ).distinct()
-    for r in range(rounds):
+
+    def step(dist, probed):
         offers = und.join(
             dist.withColumnRenamed("node", "_s"), "_s"
         ).select(
             F.col("_d").alias("node"),
             (F.col("hops") + F.lit(1).cast("bigint")).alias("hops"),
         )
-        dist = (
+        return (
             dist.unionByName(offers)
             .groupBy("node")
             .agg(F.min("hops").alias("hops"))
         )
-        if ckpt_every and (r + 1) % ckpt_every == 0 and r + 1 < rounds:
-            dist = dist.localCheckpoint()
-    return dist
+
+    return _drive(dist, step, rounds, _parallel_parts(edges.sparkSession))[0]

@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from asterlake.operators.bpe import _CHECKPOINT_EVERY, _adjacent_pairs, _merge_fold
+
 CONT = "##"
 UNK = "[UNK]"
 SCORE_SCALE = 10**12
@@ -70,26 +72,9 @@ def _merged_symbol(a: str, b: str) -> str:
     return a + (b[len(CONT):] if b.startswith(CONT) else b)
 
 
-def _merge_fold(symbols: Column, a: str, b: str) -> Column:
-    """Greedy leftmost-first merge of adjacent (a, b) — the bpe.py fold
-    with the WordPiece merged literal."""
-    merged = F.lit(_merged_symbol(a, b))
-    return F.aggregate(
-        symbols,
-        F.array().cast(T.ArrayType(T.StringType())),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (s == F.lit(b)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
 def wordpiece_train(
     words: DataFrame,
     n_merges: int = 50,
-    checkpoint_every: int = 8,
 ) -> tuple[list[tuple[str, str]], list[str]]:
     """Learn ``n_merges`` WordPiece merges from a ``(word, n)`` table.
 
@@ -122,18 +107,9 @@ def wordpiece_train(
             .groupBy("s")
             .agg(F.sum("n").alias("cnt"))
         )
-        pairs = state.select(
-            F.posexplode(F.slice("syms", 1, F.size("syms") - 1)).alias(
-                "i", "a"
-            ),
-            F.col("syms"),
-            F.col("n"),
-        ).select(
-            "a",
-            F.element_at("syms", F.col("i") + 2).alias("b"),
-            "n",
+        pair_cnt = _adjacent_pairs(state).groupBy("a", "b").agg(
+            F.sum("n").alias("cnt_ab")
         )
-        pair_cnt = pairs.groupBy("a", "b").agg(F.sum("n").alias("cnt_ab"))
         scored = (
             pair_cnt.join(
                 F.broadcast(sym_cnt.withColumnRenamed("cnt", "cnt_a")),
@@ -170,11 +146,12 @@ def wordpiece_train(
             break
         a, b = top[0].a, top[0].b
         merges.append((a, b))
-        vocab.add(_merged_symbol(a, b))
+        merged = _merged_symbol(a, b)
+        vocab.add(merged)
         state = state.select(
-            _merge_fold(F.col("syms"), a, b).alias("syms"), "n"
+            _merge_fold(F.col("syms"), a, b, merged).alias("syms"), "n"
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % _CHECKPOINT_EVERY == 0:
             # truncate the fold-on-fold lineage (the graph.py discipline)
             state = state.localCheckpoint()
     return merges, sorted(vocab)

@@ -7444,15 +7444,16 @@ def q_kcore_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASSERTS (a deeper-than-14 convergence raises rather than silently
     hash-mismatching). Below graph.SMALL_GRAPH_EDGES edges the whole
     loop runs in one task; above it each round is ONE shuffle join +
-    ONE combinable histogram + the JVM-side H-index fold, plus the
-    node-sized short-circuit change probe the convergence gate costs."""
+    ONE combinable histogram + the JVM-side H-index fold, plus, on
+    probed rounds, the join to the previous values whose changed-node
+    count rides the round's landing job."""
     from asterlake.operators.graph import kcore_converged
 
     pairs = _copurchase_pairs(spark, sf_dir, min_qty=45)
     # min_rounds=5: the measured convergence depth never dips below 5
     # on this graph family (5/8/10 at sf0.001/0.01/0.1), so the first
     # four rounds run probe-free in the cheap fixed-round shape —
-    # values identical, 4 landings + 4 probes saved
+    # values identical, 4 probe joins and 3 landings saved
     out, rounds_run = kcore_converged(
         pairs, src="p1", dst="p2", min_rounds=5
     )

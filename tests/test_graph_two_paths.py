@@ -76,6 +76,10 @@ LOOPS = {
         graph.kcore_decomposition(e, rounds=3), None
     ),
     "kcore_converged": lambda e, s: graph.kcore_converged(e, min_rounds=2),
+    # the handmade graph converges below 6 rounds: an unprobed prefix
+    "kcore_converged_min_rounds_6": lambda e, s: graph.kcore_converged(
+        e, min_rounds=6
+    ),
     "label_propagation": lambda e, s: (
         graph.label_propagation(e, iters=3), None
     ),
@@ -115,3 +119,46 @@ def test_one_task_equals_distributed(spark, monkeypatch, loop, graph_name):
     assert dist.exceptAll(small).count() == 0
     assert small_rounds == dist_rounds
     assert small_warn == dist_warn
+
+
+# converged loop name -> edges -> (frame, rounds_run or None); each
+# stops early on the handmade graph
+CONVERGED = {
+    "pagerank_converged": lambda e: graph.pagerank_converged(
+        e, max_iter=30, tol_fp=10**9
+    ),
+    "kcore_converged": lambda e: graph.kcore_converged(e),
+    "connected_components": lambda e: (graph.connected_components(e), None),
+}
+
+
+@pytest.mark.parametrize("loop", list(CONVERGED))
+def test_converged_distributed_loops_run_no_extra_action(
+    spark, monkeypatch, loop
+):
+    """A probed distributed round reads its convergence value from an
+    Observation on its landing job: no count, collect, first, take or
+    toPandas runs inside the loop, and the result still equals the one-
+    task path (connected components, which has none, its components)."""
+    edges, _ = _handmade(spark)
+    if loop == "connected_components":
+        want = spark.createDataFrame(
+            [(n, 1) for n in range(1, 11)], "id long, component long"
+        )
+        want_rounds = None
+    else:
+        monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", ONE_TASK)
+        want, want_rounds = CONVERGED[loop](edges)
+        assert want_rounds < 30
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", DISTRIBUTED)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("driver action inside a converged loop")
+
+    with monkeypatch.context() as m:
+        for action in ("count", "collect", "first", "take", "toPandas"):
+            m.setattr(type(edges), action, refuse)  # the concrete class
+        got, rounds = CONVERGED[loop](edges)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert rounds == want_rounds

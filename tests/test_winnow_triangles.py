@@ -530,39 +530,40 @@ def test_kcore_converged_min_rounds_same_values(spark):
     assert r_skip >= max(r_base, 6)
 
 
-def test_graph_loop_conf_restored_and_values_conf_independent(spark):
-    """r14 round shape: kcore_decomposition and label_propagation pin
-    spark.sql.shuffle.partitions to a parallelism-derived count for the
-    loop (so low-core bench runs don't pay 32-way task overhead per
-    round) — the pin must RESTORE the session conf afterwards, and the
-    returned values must be identical under any ambient conf (the
-    repartition/shuffle-hash round shape is semantics-free)."""
-    from asterlake.operators.graph import (
-        kcore_decomposition,
-        label_propagation,
-    )
+def test_graph_loop_conf_restored_and_values_conf_independent(
+    spark, monkeypatch
+):
+    """The distributed graph loops pin spark.sql.shuffle.partitions to a
+    parallelism-derived count for the loop (so low-core bench runs don't
+    pay 32-way task overhead per round) — the pin must RESTORE the
+    session conf afterwards, and the returned values must be identical
+    under any ambient conf (the repartition/shuffle-hash round shape is
+    semantics-free). The 60-edge graph is below the one-task threshold,
+    so the distributed path is forced."""
+    from asterlake.operators import graph
 
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
     edges = [(i % 17, (i * 5 + 2) % 17) for i in range(60)]
     df = spark.createDataFrame(edges, "src long, dst long")
+    seeds = spark.createDataFrame([(0,), (5,)], "node long")
+    loops = {
+        "kcore_decomposition": lambda: graph.kcore_decomposition(df),
+        "label_propagation": lambda: graph.label_propagation(df),
+        "pagerank_fixed_point": lambda: graph.pagerank_fixed_point(df),
+        "kcore_converged": lambda: graph.kcore_converged(df)[0],
+        "bfs_distances": lambda: graph.bfs_distances(df, seeds),
+    }
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     try:
         spark.conf.set(key, "7")
-        kc7 = {(r.node, r.coreness) for r in kcore_decomposition(df).collect()}
-        lp7 = {
-            (r.node, r.community) for r in label_propagation(df).collect()
-        }
+        at7 = {name: set(run().collect()) for name, run in loops.items()}
         assert spark.conf.get(key) == "7", "loop must restore the conf"
         spark.conf.set(key, "32")
-        kc32 = {
-            (r.node, r.coreness) for r in kcore_decomposition(df).collect()
-        }
-        lp32 = {
-            (r.node, r.community) for r in label_propagation(df).collect()
-        }
+        at32 = {name: set(run().collect()) for name, run in loops.items()}
         assert spark.conf.get(key) == "32"
-        assert kc7 == kc32
-        assert lp7 == lp32
+        for name in loops:
+            assert at7[name] == at32[name], name
     finally:
         spark.conf.set(key, prev)
 
@@ -582,6 +583,10 @@ def test_kcore_converged_warns_on_max_rounds(spark):
         out, rounds_run = kcore_converged(df, max_rounds=1)
     assert rounds_run == 1
     assert any("h-index" in str(x.message) for x in w)
+    (warned,) = [x for x in w if issubclass(x.category, RuntimeWarning)]
+    assert "kcore_converged" in str(warned.message)
+    assert "max_rounds=1" in str(warned.message)
+    assert warned.filename == __file__  # points at the caller
     got = {r.node: r.coreness for r in out.collect()}
     # still a valid monotone upper bound on the exact peel
     exact = _exact_coreness(edges)
