@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from asterlake.operators.textstats import whitespace_tokens
+
 
 def chunk_documents(
     docs: DataFrame,
@@ -59,7 +61,7 @@ def chunk_documents(
         id_col,
         "chunk_id",
         "chunk_text",
-        F.size(F.split(F.col("chunk_text"), " ")).alias("n_chunk_tokens"),
+        F.size(whitespace_tokens("chunk_text")).alias("n_chunk_tokens"),
     )
 
 

@@ -37,6 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from asterlake.tables import is_narrow
+
 __all__ = [
     "FieldRule",
     "blocked_candidates",
@@ -97,12 +99,8 @@ def blocked_candidates(
         for c in right.columns
     ]
     lsel = left.select(*lcols)
-    spark = left.sparkSession
     hinted = "ResolvedHint" in left._jdf.queryExecution().analyzed().toString()
-    if not hinted and (
-        left.rdd.getNumPartitions()
-        < spark.sparkContext.defaultParallelism
-    ):
+    if not hinted and is_narrow(left):
         lsel = lsel.repartition(*[F.col(c) for c in block_cols])
     return lsel.join(right.select(*rcols), block_cols)
 

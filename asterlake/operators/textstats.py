@@ -49,11 +49,6 @@ def whitespace_tokens(text_col: str) -> Column:
     return F.split(F.col(text_col), " ")
 
 
-def token_count(text_col: str) -> Column:
-    """Whitespace token count."""
-    return F.size(whitespace_tokens(text_col))
-
-
 def bpe_ish_token_count(text_col: str) -> Column:
     """BPE-ish token estimate: letter runs, single digits, single symbols —
     the shape (not the merges) of a GPT-style pre-tokenizer regex."""

@@ -51,6 +51,7 @@ from asterlake.session import pinned_conf
 from asterlake.tables import (
     events_read_schema,
     fan_out_small_scan,
+    is_narrow,
     load_table,
     normalize_events_ts,
 )
@@ -163,6 +164,8 @@ def _drain(
     it, so there the flush batch is load-bearing: skipping it drops rows
     in q_stream_ohlc_append, and only there (every other drain was
     verified row-identical at sf0.1 on top of the oracle gate)."""
+    from asterlake.streaming.pipeline import run_available_now
+
     with tempfile.TemporaryDirectory() as workdir:
         out = build(_stream_source(spark, sf_dir, table, workdir, copies))
         with pinned_conf(
@@ -174,14 +177,11 @@ def _drain(
                 ),
             },
         ):
-            (
+            run_available_now(
                 out.writeStream.format("memory")
                 .queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
+                .outputMode(mode),
+                os.path.join(workdir, "ckpt"),
             )
     return spark.table(name)
 
@@ -1710,22 +1710,27 @@ def q_stream_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, availableNow replay."""
     from asterlake.operators.linkage import blocked_candidates, fs_link
 
-    left_static, _ = _linkage_sides(load_table(spark, sf_dir, "customer"))
+    customer = load_table(spark, sf_dir, "customer")
+    left_static, _ = _linkage_sides(customer)
+    # Fan the STREAM side before scoring (r15, r14 verdict ask #8):
+    # profiling showed the drain's ~3s steady cost is addBatch
+    # execution (planning is ~0.2s) — the micro-batch file scan is
+    # ONE task, so the whole Fellegi-Sunter comparator battery ran
+    # single-core. One stateless exchange of the batch's rows buys
+    # parallel scoring (measured 3.36 -> 0.74s min over {8,16,32},
+    # rows identical); the broadcast static side still pays no
+    # shuffle. A streaming frame has no partition count to ask, so the
+    # gate asks the batch read of the file the stream replays: a scan
+    # already at the session's parallelism is left alone, as in
+    # blocked_candidates and fan_out_small_scan.
+    fan_out = is_narrow(customer)
 
     def build(read: Callable[[], DataFrame]) -> DataFrame:
         _, right_stream = _linkage_sides(read())
-        # Fan the STREAM side before scoring (r15, r14 verdict ask #8):
-        # profiling showed the drain's ~3s steady cost is addBatch
-        # execution (planning is ~0.2s) — the micro-batch file scan is
-        # ONE task, so the whole Fellegi-Sunter comparator battery ran
-        # single-core. One stateless exchange of the batch's rows buys
-        # parallel scoring (measured 3.36 -> 0.74s min over {8,16,32},
-        # rows identical); parallelism-derived, and the broadcast static
-        # side still pays no shuffle. The streaming twin of the r14
-        # narrow-left rescue in blocked_candidates (guide §2.5).
-        right_stream = right_stream.repartition(
-            spark.sparkContext.defaultParallelism
-        )
+        if fan_out:
+            right_stream = right_stream.repartition(
+                spark.sparkContext.defaultParallelism
+            )
         cand = blocked_candidates(
             F.broadcast(left_static), right_stream, ["c_nationkey", "blk"]
         )
@@ -3413,10 +3418,12 @@ def q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral view with ordinality: posexplode emits (position, token)
     per document — the generic analog of the reference's pandas
     column-wise concat (SURVEY J3 -> posexplode)."""
+    from asterlake.operators.textstats import whitespace_tokens
+
     d = load_table(spark, sf_dir, "documents").filter("doc_id % 20 = 0")
     return d.select(
         "doc_id",
-        F.posexplode(F.split("text", " ")).alias("pos", "token"),
+        F.posexplode(whitespace_tokens("text")).alias("pos", "token"),
     )
 
 
@@ -4225,8 +4232,10 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array surface: filter, sort+slice, contains, transform
     +max, flatten+reverse — the §2.6 'absent-but-built-in' array family,
     each a row-local projection (no shuffle, whole-stage codegen)."""
+    from asterlake.operators.textstats import whitespace_tokens
+
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = whitespace_tokens("text")
     return d.select(
         "doc_id",
         F.size(F.filter(toks, lambda t: F.length(t) > 4))
@@ -6090,8 +6099,10 @@ def q_collocations_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     and unigram counts are two partial-agg shuffles over token-sized keys;
     the one-row corpus total broadcasts; top-50 is TakeOrderedAndProject
     with a (lift, w1, w2) tiebreak so the cutoff is deterministic."""
+    from asterlake.operators.textstats import whitespace_tokens
+
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.split("text", " ").alias("t"))
+    toks = d.select(whitespace_tokens("text").alias("t"))
     bi = toks.select(
         F.explode(
             F.expr(

@@ -65,23 +65,40 @@ from asterlake.operators.integrity import (
     row_signature,
 )
 
-_VDIR = re.compile(r"^v=(\d+)$")
+
+def committed_dirs(root: str, prefix: str, manifest: str | None) -> list[int]:
+    """Sorted numbers ``N`` of the ``root/<prefix>N`` directories whose
+    ``manifest`` file has landed (every such directory when ``manifest``
+    is None). A directory without its manifest is a crashed or in-flight
+    write, invisible to readers."""
+    if not os.path.isdir(root):
+        return []
+    pattern = re.compile(rf"^{re.escape(prefix)}(\d+)$")
+    return sorted(
+        int(m.group(1))
+        for name in os.listdir(root)
+        if (m := pattern.match(name))
+        and (
+            manifest is None
+            or os.path.isfile(os.path.join(root, name, manifest))
+        )
+    )
+
+
+def commit_manifest(path: str, text: str) -> None:
+    """Publish ``text`` at ``path`` atomically: write a sibling temp file,
+    then rename it into place. The rename is the commit point, so a
+    reader sees either no manifest or the whole one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.rename(tmp, path)
 
 
 def _versions(root: str, committed_only: bool = True) -> list[int]:
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for name in os.listdir(root):
-        m = _VDIR.match(name)
-        if not m:
-            continue
-        if committed_only and not os.path.isfile(
-            os.path.join(root, name, "manifest.json")
-        ):
-            continue
-        out.append(int(m.group(1)))
-    return sorted(out)
+    return committed_dirs(
+        root, "v=", "manifest.json" if committed_only else None
+    )
 
 
 def latest_version(root: str) -> int | None:
@@ -479,10 +496,10 @@ def write_version(
             manifest["file_stats"].setdefault(
                 name, {"n_rows": 0, "cols": {}}
             )["blooms"] = b
-    tmp = _manifest_path(root, version) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.rename(tmp, _manifest_path(root, version))  # atomic commit point
+    commit_manifest(
+        _manifest_path(root, version),
+        json.dumps(manifest, indent=1, sort_keys=True),
+    )
     return manifest
 
 

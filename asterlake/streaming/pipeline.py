@@ -12,6 +12,18 @@ already-ingested documents — fixing the reference's clobber-and-rewrite
 (``mode("overwrite")``, ``src/etl/bronze_to_silver.py:96``) without any
 bookkeeping code.
 
+Two mechanics are written once and shared by every sink:
+
+- ``run_available_now`` takes a configured ``DataStreamWriter`` and its
+  checkpoint path and runs it to completion. Each sink keeps its own
+  checkpoint; the memory-sink drains in ``queries._drain`` start here too.
+- The epoch landing: a ``foreachBatch`` epoch overwrites
+  ``root/batch=<epoch_id>`` (``_land_epoch``), so a retried epoch replaces
+  its own output, and ``_read_epochs`` reads every landed epoch back as
+  one frame, batch or stream, empty with the declared schema when none
+  has landed. The curation chain, the substring screen and the CDC apply
+  land through it.
+
 Beyond ingest, the streaming forms of the engine's stateful operators:
 
 - ``watermarked_dedup``    — streaming twin of the gold dedup (A1-A3):
@@ -34,6 +46,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 from datetime import datetime, timezone
 from typing import Any
@@ -41,6 +54,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -55,6 +69,22 @@ from pyspark.sql.types import (
 
 from asterlake.operators.flatten import flatten_feed
 from asterlake.schemas import BRONZE_FEED_SCHEMA
+from asterlake.sources.versioned import commit_manifest, committed_dirs
+
+
+def _json_stream(
+    spark: SparkSession,
+    schema,
+    source_dir: str,
+    max_files_per_trigger: int | None = None,
+    **options: str,
+) -> DataFrame:
+    """File-source stream over a JSON directory, optionally rate-limited
+    to ``max_files_per_trigger`` files per micro-batch."""
+    reader = spark.readStream.schema(schema).options(**options)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(source_dir)
 
 
 def read_bronze_stream(
@@ -63,13 +93,59 @@ def read_bronze_stream(
     """File-source stream over the bronze JSON directory (explicit schema —
     streaming reads cannot infer, which is the Spark-native argument for the
     map-typed BRONZE_FEED_SCHEMA over the reference's inference)."""
-    reader = (
-        spark.readStream.schema(BRONZE_FEED_SCHEMA)
-        .option("multiline", "true")
+    return _json_stream(
+        spark, BRONZE_FEED_SCHEMA, bronze_dir, max_files_per_trigger,
+        multiline="true",
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(bronze_dir)
+
+
+def run_available_now(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Run a configured stream ``writer`` over everything its source holds
+    now, then return.
+
+    Every streaming sink in the engine starts here. ``checkpoint_dir``
+    carries the source position and any operator state from one run to
+    the next, so a re-run processes only what arrived since; the
+    ``availableNow`` trigger drains in as many micro-batches as the
+    source's rate limit asks for and stops."""
+    (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _epoch_dir(root: str, eid: int) -> str:
+    return os.path.join(root, f"batch={eid}")
+
+
+def _land_epoch(df: DataFrame, root: str, eid: int) -> str:
+    """Write one foreachBatch epoch to ``root/batch=<eid>`` and return that
+    directory. The write overwrites, so a retried epoch replaces its own
+    partial output instead of appending a second copy: foreachBatch
+    delivers at least once, and the epoch-keyed overwrite makes the sink
+    effectively exactly once."""
+    out_dir = _epoch_dir(root, eid)
+    df.write.mode("overwrite").parquet(out_dir)
+    return out_dir
+
+
+def _read_epochs(
+    spark: SparkSession, root: str, schema, *, stream: bool = False
+) -> DataFrame:
+    """Every epoch :func:`_land_epoch` wrote under ``root``, read back as one
+    frame with the declared ``schema`` (a stream when ``stream``). When no
+    epoch has landed yet the frame is empty: the directory is created so
+    both readers have a path to list. ``batch`` is not a column; the
+    epoch subdirectories are read as plain files."""
+    os.makedirs(root, exist_ok=True)
+    reader = spark.readStream if stream else spark.read
+    return (
+        reader.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(root)
+    )
 
 
 def stream_bronze_to_silver(
@@ -94,14 +170,11 @@ def stream_bronze_to_silver(
         batch_id=batch_id,
         processing_time=processing_time,
     )
-    (
+    run_available_now(
         silver.writeStream.format("parquet")
         .option("path", silver_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("_processing_date")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .partitionBy("_processing_date"),
+        checkpoint_dir,
     )
 
 
@@ -657,13 +730,7 @@ def stream_merge_dimension(
         survivors = batch.dropDuplicates([natural_key])
         merge_dimension(batch.sparkSession, survivors, path, natural_key)
 
-    (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(upsert), checkpoint_dir)
 
 
 def stream_quarantine(
@@ -696,13 +763,7 @@ def stream_quarantine(
         finally:
             parent.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(split)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream.writeStream.foreachBatch(split), checkpoint_dir)
 
 
 def stream_drift(
@@ -743,88 +804,7 @@ def stream_drift(
         )
         out.write.mode("append").parquet(report_path)
 
-    (
-        stream.writeStream.foreachBatch(report)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def has_transform_with_state() -> bool:
-    """True iff this runtime can execute transformWithStateInPandas:
-    the API's Python worker speaks a protobuf protocol, absent from
-    containers without ``google.protobuf``."""
-    try:  # pragma: no cover - environment probe
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_counts_tws(
-    events: DataFrame,
-    id_col: str = "user_id",
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Per-key running event counter on the Spark 4
-    ``transformWithStateInPandas`` API — the successor extension point to
-    ``applyInPandasWithState`` (see :func:`running_user_counts`, kept as
-    the legacy-API twin): named state variables on an explicit handle,
-    per-state **TTL** (``state_ttl_ms`` expires an idle key's state —
-    the bounded-state story applyInPandasWithState cannot express
-    without hand-rolled timeout bookkeeping), timers, and initial-state
-    seeding. Emits ``(user_id, n_events)`` per key per batch, counts
-    continuing across micro-batches from the stored value — same
-    contract as the legacy twin, so the two are drop-in comparable.
-
-    Scale: state is one BIGINT per key in the state store (sharded by
-    key across executors, RocksDB-backed on a real cluster); TTL bounds
-    the store for unbounded key universes (the millions-of-transient-
-    users case).
-
-    Environment gate (same class as the multimodal codecs): the
-    transformWithState Python worker protocol needs ``google.protobuf``
-    and the RocksDB state store provider; this container ships neither
-    protobuf nor a writable rocksdb dir by default, so
-    :func:`has_transform_with_state` reports availability and the test
-    skips where the runtime can't execute it. The operator itself is
-    complete — on a cluster with protobuf + RocksDB it runs as written."""
-    if not has_transform_with_state():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf (and the "
-            "RocksDB state store provider); use running_user_counts "
-            "(applyInPandasWithState) in this environment"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Counter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState(
-                "n_events", "n bigint", ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            n = sum(len(pdf) for pdf in rows)
-            prev = self._count.get()[0] if self._count.exists() else 0
-            total = int(prev) + int(n)
-            self._count.update((total,))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(id_col).transformWithStateInPandas(
-        _Counter(),
-        outputStructType="user_id long, n_events bigint",
-        outputMode="Update",
-        timeMode="None",
-    )
+    run_available_now(stream.writeStream.foreachBatch(report), checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1104,85 +1084,43 @@ def stream_curation_chain(
     Drains whatever is in ``source_dir`` and returns the packed result
     read back as a batch DataFrame (empty-schema-correct when nothing
     passes the gate)."""
-    import os
-
     admitted_dir = os.path.join(workdir, "admitted")
     packed_dir = os.path.join(workdir, "packed")
 
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.json(source_dir)
     stage1 = stream_curation_admit(
-        src, vocab, model, unk_floor, gate_micros,
+        _json_stream(spark, source_schema, source_dir, max_files_per_trigger),
+        vocab, model, unk_floor, gate_micros,
         domain_col=domain_col, id_col=id_col, text_col=text_col, cap=cap,
     )
-    def _epoch_sink(target_dir):
-        # idempotent per-epoch landing: a retried epoch OVERWRITES its
-        # own batch=<eid> subdir (exactly-once effective), never appends
-        # a second copy into a shared directory (ADVICE r10)
-        def write(df, eid):
-            df.write.mode("overwrite").parquet(
-                os.path.join(target_dir, f"batch={eid}")
-            )
-
-        return write
-
-    q1 = (
-        stage1.writeStream.outputMode("update")
-        .foreachBatch(_epoch_sink(admitted_dir))
-        .option("checkpointLocation", os.path.join(workdir, "ck_admit"))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stage1.writeStream.outputMode("update").foreachBatch(
+            lambda df, eid: _land_epoch(df, admitted_dir, eid)
+        ),
+        os.path.join(workdir, "ck_admit"),
     )
-    q1.awaitTermination()
 
     admit_schema = (
         f"{domain_col} string, {id_col} long, n_tokens long, admit_seq long"
     )
-    if not os.path.isdir(admitted_dir):
-        # nothing passed the gate in any batch: hand an empty frame on
-        os.makedirs(admitted_dir)
-        spark.createDataFrame([], admit_schema).write.mode(
-            "append"
-        ).parquet(admitted_dir)
-    adm = (
-        spark.readStream.schema(admit_schema)
-        # the handoff nests one batch=<eid> subdir per stage-1 epoch;
-        # recursive lookup reads them as plain files (batch is NOT a
-        # partition column of the admitted schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(admitted_dir)
-    )
     mixed = stream_mixture_expand(
-        adm, factor_ppm, default_ppm, domain_col=domain_col, id_col=id_col
+        _read_epochs(spark, admitted_dir, admit_schema, stream=True),
+        factor_ppm, default_ppm, domain_col=domain_col, id_col=id_col,
     )
     packed = stream_pack_sequences(
         mixed, budget=budget, n_buckets=n_buckets, id_col=id_col
     )
-    q2 = (
-        packed.writeStream.outputMode("update")
-        .foreachBatch(_epoch_sink(packed_dir))
-        .option("checkpointLocation", os.path.join(workdir, "ck_pack"))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        packed.writeStream.outputMode("update").foreachBatch(
+            lambda df, eid: _land_epoch(df, packed_dir, eid)
+        ),
+        os.path.join(workdir, "ck_pack"),
     )
-    q2.awaitTermination()
 
     packed_schema = (
         f"bucket int, {id_col} long, copy_id int, n_tokens long,"
         " offset long, pack_id long, pack_offset long, end_pack_id long"
     )
-    if not os.path.isdir(packed_dir):
-        os.makedirs(packed_dir)
-        spark.createDataFrame([], packed_schema).write.mode(
-            "append"
-        ).parquet(packed_dir)
-    return (
-        spark.read.schema(packed_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(packed_dir)
-    )
+    return _read_epochs(spark, packed_dir, packed_schema)
 
 
 def stream_substring_screen(
@@ -1216,8 +1154,6 @@ def stream_substring_screen(
     returns the accumulated flags read back as a batch DataFrame.
     Restart-safe: the checkpoint resumes the source position and the
     index directory carries the already-appended batches forward."""
-    import os
-
     from asterlake.operators.substrings import (
         substring_digest_index,
         substring_index_matches,
@@ -1228,51 +1164,32 @@ def stream_substring_screen(
 
     def screen(batch_df, eid):
         batch_df = batch_df.localCheckpoint(eager=True)
-        if os.path.isdir(index_dir):
-            index = (
-                spark.read.schema("dig string")
-                .option("recursiveFileLookup", "true")
-                .parquet(index_dir)
-            )
-        else:
-            index = spark.createDataFrame([], "dig string")
-        substring_index_matches(
-            batch_df, index, min_tokens, id_col, text_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(flags_dir, f"batch={eid}")
+        index = _read_epochs(spark, index_dir, "dig string")
+        _land_epoch(
+            substring_index_matches(
+                batch_df, index, min_tokens, id_col, text_col
+            ),
+            flags_dir,
+            eid,
         )
-        substring_digest_index(
-            batch_df, min_tokens, id_col, text_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={eid}")
+        _land_epoch(
+            substring_digest_index(batch_df, min_tokens, id_col, text_col),
+            index_dir,
+            eid,
         )
 
-    reader = spark.readStream.schema(source_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.json(source_dir)
-        .writeStream.foreachBatch(screen)
-        .option("checkpointLocation", os.path.join(workdir, "ck_screen"))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        _json_stream(
+            spark, source_schema, source_dir, max_files_per_trigger
+        ).writeStream.foreachBatch(screen),
+        os.path.join(workdir, "ck_screen"),
     )
-    q.awaitTermination()
 
     flag_schema = (
         f"{id_col} long, n_spans long, dup_tokens long,"
         " max_span_tokens int"
     )
-    if not os.path.isdir(flags_dir):
-        os.makedirs(flags_dir)
-        spark.createDataFrame([], flag_schema).write.mode(
-            "append"
-        ).parquet(flags_dir)
-    return (
-        spark.read.schema(flag_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(flags_dir)
-    )
+    return _read_epochs(spark, flags_dir, flag_schema)
 
 
 def stream_apply_changes(
@@ -1340,7 +1257,6 @@ def stream_apply_changes(
     epoch against a 100 TB base shuffles the base once, never joins it
     twice."""
     import json
-    import os
 
     from pyspark.sql import Observation
 
@@ -1352,7 +1268,7 @@ def stream_apply_changes(
 
     def fold(batch: DataFrame, eid: int) -> None:
         spark = batch.sparkSession
-        committed = _cdc_committed_versions(snapshot_dir)
+        committed = committed_dirs(snapshot_dir, "batch=", _CDC_MANIFEST)
         newer = [v for v in committed if v > eid]
         if newer:
             raise RuntimeError(
@@ -1365,32 +1281,29 @@ def stream_apply_changes(
         prev = [v for v in committed if v < eid]
         if prev:
             base = spark.read.schema(data_schema).parquet(
-                os.path.join(snapshot_dir, f"batch={max(prev)}")
+                _epoch_dir(snapshot_dir, max(prev))
             )
         elif initial is not None:
             base = initial.select(*data_cols)
         else:
             base = spark.createDataFrame([], data_schema)
         obs = Observation(f"cdc-epoch-{eid}")
-        out_dir = os.path.join(snapshot_dir, f"batch={eid}")
         # data first (overwrite clears any prior partial OR committed
         # attempt of this same epoch), manifest commit second — the
         # write-ahead-data discipline of sources/versioned.py
-        apply_changes(base, batch, key_cols, seq_col, op_col).observe(
-            obs, F.count(F.lit(1)).cast("bigint").alias("n_rows")
-        ).write.mode("overwrite").parquet(out_dir)
-        tmp = os.path.join(out_dir, _CDC_MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump({"epoch": eid, "n_rows": obs.get["n_rows"]}, f)
-        os.rename(tmp, os.path.join(out_dir, _CDC_MANIFEST))  # commit
+        out_dir = _land_epoch(
+            apply_changes(base, batch, key_cols, seq_col, op_col).observe(
+                obs, F.count(F.lit(1)).cast("bigint").alias("n_rows")
+            ),
+            snapshot_dir,
+            eid,
+        )
+        commit_manifest(
+            os.path.join(out_dir, _CDC_MANIFEST),
+            json.dumps({"epoch": eid, "n_rows": obs.get["n_rows"]}),
+        )
 
-    (
-        changes.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(changes.writeStream.foreachBatch(fold), checkpoint_dir)
 
 
 _CDC_MANIFEST = "_manifest.json"
@@ -1413,23 +1326,6 @@ def _require_local_path(path: str, what: str) -> None:
         )
 
 
-def _cdc_committed_versions(snapshot_dir: str) -> "list[int]":
-    """Committed ``batch=<eid>`` versions: data directory + committed
-    ``_manifest.json`` (manifest-less directories are crashed or
-    in-flight epochs — invisible to every reader)."""
-    import os
-    import re
-
-    if not os.path.isdir(snapshot_dir):
-        return []
-    return sorted(
-        int(m.group(1))
-        for d in os.listdir(snapshot_dir)
-        if (m := re.match(r"batch=(\d+)$", d))
-        and os.path.isfile(os.path.join(snapshot_dir, d, _CDC_MANIFEST))
-    )
-
-
 def read_cdc_snapshot(
     spark: SparkSession, snapshot_dir: str, schema=None
 ) -> DataFrame:
@@ -1441,15 +1337,13 @@ def read_cdc_snapshot(
     a reader racing a live writer can never see an in-flight epoch's
     partial files. Local-filesystem only, same contract as
     :func:`stream_apply_changes`."""
-    import os
-
     _require_local_path(snapshot_dir, "read_cdc_snapshot snapshot_dir")
     if not os.path.isdir(snapshot_dir):
         raise FileNotFoundError(f"no CDC snapshot at {snapshot_dir}")
-    eids = _cdc_committed_versions(snapshot_dir)
+    eids = committed_dirs(snapshot_dir, "batch=", _CDC_MANIFEST)
     if not eids:
         raise FileNotFoundError(
             f"no committed snapshot versions in {snapshot_dir}"
         )
     reader = spark.read.schema(schema) if schema else spark.read
-    return reader.parquet(os.path.join(snapshot_dir, f"batch={max(eids)}"))
+    return reader.parquet(_epoch_dir(snapshot_dir, max(eids)))

@@ -101,6 +101,16 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
         df.createOrReplaceTempView(name)
 
 
+def is_narrow(df: DataFrame) -> bool:
+    """True when ``df`` has fewer partitions than the session's default
+    parallelism: a scan that would leave cores idle. Parquet cannot split
+    below a row group, so every single-row-group file is narrow."""
+    return (
+        df.rdd.getNumPartitions()
+        < df.sparkSession.sparkContext.defaultParallelism
+    )
+
+
 def fan_out_small_scan(df: DataFrame) -> DataFrame:
     """Spread a SMALL scan across the box for CPU-heavy row-local work.
 
@@ -132,7 +142,6 @@ def fan_out_small_scan(df: DataFrame) -> DataFrame:
         != "true"
     ):
         return df
-    cores = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
+    if not is_narrow(df):
         return df
-    return df.repartition(cores)
+    return df.repartition(spark.sparkContext.defaultParallelism)

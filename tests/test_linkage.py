@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import functions as F
 
 from asterlake.operators.linkage import (
@@ -68,6 +71,44 @@ def test_blocked_candidates_repartition_is_gated(spark):
     assert rows == {(1, 10), (2, 10), (3, 11)}
     rows_h = {(r.id_l, r.rid_r) for r in hinted.collect()}
     assert rows_h == {(1, 10), (2, 10), (3, 11)}
+
+
+def test_stream_linkage_fans_out_only_a_narrow_scan(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """q_stream_linkage round-robins its stream side only when the batch
+    read of the customer file the stream replays is narrow. A customer
+    table already at the session's parallelism streams through without
+    the extra exchange."""
+    from asterlake import queries
+    from asterlake.tables import load_table
+
+    cores = spark.sparkContext.defaultParallelism
+    wide_dir = str(tmp_path / "wide")
+    load_table(spark, sf_dir, "customer").repartition(cores).write.parquet(
+        os.path.join(wide_dir, "customer.parquet")
+    )
+    wide = load_table(spark, wide_dir, "customer")
+    assert wide.rdd.getNumPartitions() >= cores
+
+    streams = {}
+
+    def capture(session, root, table, build, *_args):
+        workdir = str(tmp_path / f"replay{len(streams)}")
+        streams[root] = build(
+            queries._stream_source(session, root, table, workdir)
+        )
+
+    monkeypatch.setattr(queries, "_drain", capture)
+    queries.q_stream_linkage(spark, sf_dir)
+    queries.q_stream_linkage(spark, wide_dir)
+
+    def round_robins(df):
+        plan = df._jdf.queryExecution().logical().toString()
+        return len(re.findall(r"\bRepartition \d+, true", plan))
+
+    assert round_robins(streams[sf_dir]) == 1
+    assert round_robins(streams[wide_dir]) == 0
 
 
 def test_fs_score_exact_integer_sum(spark):

@@ -5,7 +5,8 @@ decorator or ``QUERIES["name"] = ...`` statement in ``asterlake/queries.py``
 fixes a query's position, and a later re-assignment (an oracle injected
 after the def) keeps it. The memo registry and the driver contract in
 ``__spark_entry__`` must agree with that inventory. Runtime conf writes
-stay in ``session.py`` and the memory-sink drain in one helper.
+stay in ``session.py``, the memory-sink drain in one helper, and every
+streaming run in one runner.
 """
 
 from __future__ import annotations
@@ -103,3 +104,19 @@ def test_one_memory_sink_drain():
         and call.args[0].value == "memory"
     ]
     assert len(sinks) == 1, sinks
+
+
+def test_one_available_now_runner():
+    """Every streaming sink starts through
+    ``streaming.pipeline.run_available_now``."""
+    runs = [
+        f"{path}:{call.lineno}"
+        for path, call in _calls("trigger")
+        if any(
+            kw.arg == "availableNow"
+            and isinstance(kw.value, ast.Constant)
+            and kw.value.value is True
+            for kw in call.keywords
+        )
+    ]
+    assert len(runs) == 1, runs

@@ -480,48 +480,6 @@ def test_stream_drift_reports_per_batch_tvd(spark, tmp_path):
     assert disjoint["c"].cur_n == 2 and disjoint["c"].ref_n == 0
 
 
-def test_running_counts_tws_state_survives_batches(spark, tmp_path):
-    """The transformWithStateInPandas twin of running_user_counts: the
-    named ValueState continues the count across micro-batches, matching
-    the legacy-API operator's contract. Skips where the runtime lacks
-    the API's protobuf worker protocol (this container); the operator
-    then raises a documented RuntimeError instead of crashing the
-    stream mid-flight."""
-    import pytest as _pytest
-
-    from asterlake.streaming.pipeline import (
-        has_transform_with_state,
-        running_counts_tws,
-    )
-
-    if not has_transform_with_state():
-        with _pytest.raises(RuntimeError, match="google.protobuf"):
-            running_counts_tws(_events_stream(spark, str(tmp_path)))
-        _pytest.skip("runtime lacks google.protobuf for transformWithState")
-
-    events_dir = str(tmp_path / "events")
-    os.makedirs(events_dir)
-    _write_events_jsonl(
-        os.path.join(events_dir, "b1.json"),
-        [
-            (1, "2025-01-01 10:00:00"),
-            (1, "2025-01-01 10:01:00"),
-            (2, "2025-01-01 10:00:00"),
-        ],
-    )
-    _write_events_jsonl(
-        os.path.join(events_dir, "b2.json"),
-        [(1, "2025-01-01 11:00:00")],
-    )
-    stream = _events_stream(spark, events_dir, max_files=1)
-    counts = running_counts_tws(stream, state_ttl_ms=None)
-    _drain(counts, str(tmp_path / "ck_tws"), "tws_sink", mode="update")
-    final: dict = {}
-    for r in spark.sql("SELECT * FROM tws_sink").collect():
-        final[r.user_id] = max(final.get(r.user_id, 0), r.n_events)
-    assert final == {1: 3, 2: 1}
-
-
 def test_bloom_probe_composes_into_streaming(spark, tmp_path):
     """The Bloom semi-join reduction (operators/bloomjoin.py) is a pure
     projection + 1-row broadcast, so it applies UNCHANGED to a streaming
@@ -1464,6 +1422,28 @@ def test_stream_curation_chain_matches_replay_and_restarts(spark, tmp_path):
             assert o2 == o1 + t1, (b, offs)
 
 
+def test_stream_curation_chain_all_gated_out_returns_empty(spark, tmp_path):
+    """When the gate admits nothing, neither stage lands an epoch and the
+    chain still returns an empty frame with the packed schema."""
+    from asterlake.streaming.pipeline import stream_curation_chain
+
+    src = str(tmp_path / "curdocs")
+    os.makedirs(src)
+    # 'b' is out of vocabulary: every doc scores at the unk floor
+    _cur_write_batch(src, 0, [(1, "src0", "b b b"), (2, "big", "b b")])
+    got = stream_curation_chain(
+        spark, src, "doc_id long, source string, text string",
+        str(tmp_path / "curwork"),
+        _CUR_VOCAB, _CUR_MODEL, _CUR_UNK, _CUR_GATE, _CUR_FACTORS,
+        cap=_CUR_CAP, budget=_CUR_BUDGET, n_buckets=_CUR_BUCKETS,
+    )
+    assert got.collect() == []
+    assert got.schema.simpleString() == (
+        "struct<bucket:int,doc_id:bigint,copy_id:int,n_tokens:bigint,"
+        "offset:bigint,pack_id:bigint,pack_offset:bigint,end_pack_id:bigint>"
+    )
+
+
 def test_stream_pack_single_bucket_matches_batch_pack(spark, tmp_path):
     """With n_buckets=1 and monotone-id arrival the drained streaming
     packer is bit-identical to batch pack_sequences (bucket_prefix = 0,
@@ -1665,6 +1645,23 @@ def test_stream_substring_screen_flags_across_batches_and_restarts(
     # doc 21 covers "nothing shared here at all" (5 tokens)
     assert got2[21] == (1, 5)
     assert 1 not in got2 and 2 not in got2 and 11 not in got2
+
+
+def test_stream_substring_screen_empty_source_returns_empty(spark, tmp_path):
+    """An empty source directory runs no epoch; the screen returns an
+    empty frame with the flag schema."""
+    from asterlake.streaming.pipeline import stream_substring_screen
+
+    src = str(tmp_path / "ssdocs")
+    os.makedirs(src)
+    got = stream_substring_screen(
+        spark, src, "doc_id long, text string", str(tmp_path / "sswork")
+    )
+    assert got.collect() == []
+    assert got.schema.simpleString() == (
+        "struct<doc_id:bigint,n_spans:bigint,dup_tokens:bigint,"
+        "max_span_tokens:int>"
+    )
 
 
 def test_stream_ohlc_append_emits_closed_bars_exactly_once(spark, tmp_path):
