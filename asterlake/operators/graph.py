@@ -15,9 +15,9 @@ Two paths for the iterative loops. PageRank, label propagation, k-core
 ``localCheckpoint`` and count it in the same job. Then:
 
 - Below ``SMALL_GRAPH_EDGES`` edges the whole recurrence runs in ONE task:
-  ``coalesce(1).mapInPandas`` hands every edge to a numpy kernel that
-  replays the distributed recurrence bit for bit (int64 only, floor
-  division at the same points, the same tie rules and node sets). On a
+  ``_kernels.one_task`` hands every edge to a numpy kernel that replays
+  the distributed recurrence bit for bit (int64 only, floor division at
+  the same points, the same tie rules and node sets). On a
   small graph the distributed loop's cost is Spark job launch, not data:
   every round is a landing plus one job per AQE shuffle stage.
 - At or above it the distributed loop runs: per round one shuffle join
@@ -65,11 +65,11 @@ from __future__ import annotations
 import warnings
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from asterlake.operators._kernels import groups, one_task
 from asterlake.session import pinned_conf
 
 # Edge count below which an iterative loop runs in one task (see the
@@ -140,31 +140,10 @@ def _drive(state, step, rounds, parts, probe=None, tol=0, first_probe=1):
     return state, rounds_run, converged
 
 
-def _one_task(df: DataFrame, schema: StructType, kernel) -> DataFrame:
-    """Run ``kernel`` over ALL rows of ``df`` in one task.
-
-    ``coalesce(1)`` is narrow, so no exchange; it also yields exactly one
-    partition when ``df`` has none, so the kernel always runs.
-    ``kernel`` takes one numpy array per column of ``df`` and returns a
-    dict of output arrays keyed by the field names of ``schema``."""
-    cols = df.columns
-
-    def run(batches):
-        frames = list(batches)
-        if frames:
-            pdf = pd.concat(frames, ignore_index=True)
-            arrays = [pdf[c].to_numpy() for c in cols]
-        else:
-            arrays = [np.empty(0, np.int64) for _ in cols]
-        yield pd.DataFrame(kernel(*arrays))
-
-    return df.coalesce(1).mapInPandas(run, schema)
-
-
 def _one_task_converged(
     df: DataFrame, schema: StructType, kernel
 ) -> tuple[DataFrame, int, bool]:
-    """:func:`_one_task` for a convergence-gated kernel, landed eagerly.
+    """:func:`one_task` for a convergence-gated kernel, landed eagerly.
 
     ``kernel`` returns ``(columns, rounds_run, converged)``. Both scalars
     travel in a trailer row (first column null) and come back to the
@@ -184,21 +163,13 @@ def _one_task_converged(
 
     obs = Observation()
     landed = (
-        _one_task(df, StructType(schema.fields + meta), with_trailer)
+        one_task(df, StructType(schema.fields + meta), with_trailer)
         .observe(obs, F.max("_rounds").alias("r"), F.max("_conv").alias("c"))
         .where(F.col(node).isNotNull())
         .select(*schema.names)
         .localCheckpoint()
     )
     return landed, obs.get["r"], obs.get["c"]
-
-
-def _groups(key: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Start and length of each run of equal values in a sorted array."""
-    new = np.ones(len(key), bool)
-    new[1:] = key[1:] != key[:-1]
-    start = np.flatnonzero(new)
-    return start, np.diff(np.append(start, len(key)))
 
 
 def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -546,7 +517,7 @@ def _pagerank_one_task(e, src, dst, iters, damping_num, damping_den, scale, tol_
         )
 
     if tol_fp is None:
-        return _one_task(inputs, schema, lambda *a: kernel(*a)[0]), iters, False
+        return one_task(inputs, schema, lambda *a: kernel(*a)[0]), iters, False
     return _one_task_converged(inputs, schema, kernel)
 
 
@@ -739,11 +710,11 @@ def _lpa_kernel(s, d, iters):
         # (node, label) message counts: one int64 key sorts by node,
         # then label
         key, count = np.unique(di * n + lab[si], return_counts=True)
-        start, size = _groups(key // n)
+        start, size = groups(key // n)
         top = np.repeat(np.maximum.reduceat(count, start), size)
         # per node: count DESC, then label ASC; every node has a neighbour
         best = np.flatnonzero(count == top)
-        first, _ = _groups(key[best] // n)
+        first, _ = groups(key[best] // n)
         lab = key[best[first]] % n
     return {"node": nodes, "community": nodes[lab]}
 
@@ -786,7 +757,7 @@ def label_propagation(
         schema = StructType(
             [StructField("node", node), StructField("community", node)]
         )
-        return _one_task(und, schema, lambda s, d: _lpa_kernel(s, d, iters))
+        return one_task(und, schema, lambda s, d: _lpa_kernel(s, d, iters))
     parts = _parallel_parts(edges.sparkSession)
     labels = (
         und.select(F.col("_s").alias("node"))
@@ -835,7 +806,7 @@ def _kcore_kernel(s, d, max_rounds, min_rounds):
         top = h.max(initial=0)
         key = np.sort(di * (top + 1) + (top - h[si]))
         val = top - key % (top + 1)
-        start, size = _groups(key // (top + 1))
+        start, size = groups(key // (top + 1))
         rank = np.arange(1, len(key) + 1) - np.repeat(start, size)
         new = np.maximum.reduceat(np.minimum(val, rank), start)
         stationary = rounds >= min_rounds and np.array_equal(new, h)
@@ -928,7 +899,7 @@ def kcore_decomposition(
     probing off: the shared kernel and :func:`_kcore_rounds`."""
     und, n_edges = _undirected(edges, src, dst)
     if n_edges < SMALL_GRAPH_EDGES:
-        return _one_task(
+        return one_task(
             und,
             _kcore_schema(und),
             lambda s, d: _kcore_kernel(s, d, rounds, rounds + 1)[0],
@@ -1062,7 +1033,7 @@ def bfs_distances(
             StructField("node", tagged.schema["_s"].dataType),
             StructField("hops", LongType()),
         ])
-        return _one_task(
+        return one_task(
             tagged, schema, lambda s, d, k: _bfs_kernel(s, d, k, rounds)
         )
     dist = sources.select(

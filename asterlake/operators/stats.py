@@ -1,38 +1,70 @@
 """Scale-safe exact order statistics.
 
-Spark's built-in exact ``percentile`` aggregate materializes the full value
-multiset of every group inside a single aggregation buffer (an
-OpenHashMap per group on one reducer). At 100 TB a hot ``l_returnflag``
-group holds billions of rows, so that buffer — not the shuffle — is the
-thing that dies. These helpers compute the *same bits* with bounded state:
+Spark's built-in exact ``percentile`` aggregate keeps, per group, an
+``OpenHashMap`` from each distinct value to its count inside ONE object
+aggregation buffer. A group's map is one in-memory object, and its final
+merge runs on one reducer, so a hot ``l_returnflag`` group with billions
+of distinct values at 100 TB is the thing that dies — not the shuffle.
+:func:`exact_percentiles` computes the *same bits* from the distinct
+``(group, value)`` counts held as rows:
 
-1. ``groupBy(keys, value).count()`` — shuffles only **distinct**
-   ``(group, value)`` pairs, with map-side partial aggregation; reducer
-   state is one counter per distinct value, never the row multiset.
-2. A per-group cumulative-count window over the distinct values assigns
-   each value its rank interval ``[cum_start, cum_end)``.
-3. Each requested probability ``p`` maps to the fractional rank
-   ``pos = p * (n - 1)``; the two bracketing distinct values are located
-   by rank-interval containment (an equi-join on the group key with a
-   range filter — distinct-values x probs work per group, no extra
-   shuffle of the fact) and combined with linear interpolation in the
-   exact double expression Spark's ``percentile`` evaluates
-   (``(ceil(pos) - pos) * v[k] + (pos - floor(pos)) * v[k+1]``,
-   Percentile.getPercentile), so results are bit-for-bit equal to the
-   built-in — and to DuckDB's ``quantile_cont``, which the driver gate
-   already pinned as hash-identical to the built-in.
+1. ``groupBy(keys, value).count()`` shuffles only **distinct**
+   ``(group, value)`` pairs, with map-side partial aggregation, into a
+   persisted counts table. One ``count()`` of it decides the path and
+   fills the cache both paths read.
+2. Below ``SMALL_PERCENTILE_PAIRS`` distinct pairs every pair goes to
+   one numpy kernel in one task (``_kernels.one_task``): per group, sort
+   by value with NaN last, cumsum the counts and ``searchsorted`` ranks
+   ``k`` and ``k + 1``. On a small input the distributed plan's cost is
+   Spark job launch, not data. The kernel holds at most
+   ``SMALL_PERCENTILE_PAIRS`` pairs.
+3. At or above it the distributed plan ranks two-level and
+   bucket-pruned: values bucketize per group, bucket subtotals prefix-sum
+   in a tiny window, and only the buckets that hold ranks ``k`` and
+   ``k + 1`` are ever sorted (see :func:`exact_percentiles`).
 
-Reference parity: the reference engine has no percentile surface at all
-(``/root/reference/src`` is ETL glue); this exists for the beyond-parity
-profile/trim queries and their DuckDB oracles.
+Each requested probability ``p`` maps to the fractional rank
+``pos = p * (n - 1)``, and both paths interpolate the two bracketing
+values with the exact double expression Spark's ``percentile`` evaluates
+(``(ceil(pos) - pos) * v[k] + (pos - floor(pos)) * v[k+1]``,
+Percentile.getPercentile), so results are bit-for-bit equal to the
+built-in and to DuckDB's ``quantile_cont``. The threshold's A/B is at
+``SMALL_PERCENTILE_PAIRS``.
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
+
+from asterlake.operators._kernels import groups, one_task
+
+# Distinct (group, value) pairs below which exact_percentiles ranks in one
+# task (see the module docstring). Set by alternating A/B on 4 cores,
+# distributed -> one task, medians of 3 warm calls with 5 probs over 3
+# string groups of synthetic doubles: 0.6M pairs 4.84 -> 2.20 s, 1.33M
+# pairs 5.54 -> 4.75 s, 4.0M pairs 8.96 -> 9.46 s. The kernel peaks at
+# about 170 MB of Python worker memory per million pairs (tracemalloc,
+# input frame included), so the bound keeps the one worker near 340 MB.
+SMALL_PERCENTILE_PAIRS = 2_000_000
+
+# Group-key types the one-task path returns exactly: every caller's keys.
+# Integral keys travel null-coalesced with a null flag (a nullable long
+# would otherwise detour through float64). Keys of any other type rank on
+# the distributed path.
+_KERNEL_KEY_TYPES = (StringType, IntegralType)
 
 
 def _prob_col_name(p: float) -> str:
@@ -40,15 +72,15 @@ def _prob_col_name(p: float) -> str:
 
 
 # Persisted frames built by the PREVIOUS exact_percentiles call (its
-# locally-built counts + offsets), released when the NEXT call starts.
-# Lifetime contract (ADVICE r6): the output of one exact_percentiles
-# call is materialized before the next call is issued — true of every
-# caller (each driver/bench query materializes independently). A caller
-# composing several percentile outputs into ONE lazy plan should pass
-# prebuilt ``counts=`` (memoized outside this registry and never touched
-# by it) or materialize between calls. Without this, a session issuing
-# many percentile-backed queries accumulates cached blocks until
-# ContextCleaner happens to reclaim the dropped plans.
+# locally-built counts, plus the distributed path's offsets), released
+# when the NEXT call starts. Lifetime contract (ADVICE r6): the output of
+# one exact_percentiles call is materialized before the next call is
+# issued — true of every caller (each driver/bench query materializes
+# independently). A caller composing several percentile outputs into ONE
+# lazy plan should pass prebuilt ``counts=`` (memoized outside this
+# registry and never touched by it) or materialize between calls. Without
+# this, a session issuing many percentile-backed queries accumulates
+# cached blocks until ContextCleaner happens to reclaim the dropped plans.
 _PREV_CALL_STATE: list[DataFrame] = []
 
 
@@ -134,9 +166,14 @@ def exact_percentiles(
     to the built-in's behavior for w=0 rows and strictly safer than
     rank corruption for the invalid ones.
 
-    The cumulative ranks are TWO-LEVEL AND BUCKET-PRUNED: distinct
-    values bucketize into ``n_buckets`` equal-width ranges per group,
-    bucket subtotals prefix-sum in a tiny per-group window
+    Below ``SMALL_PERCENTILE_PAIRS`` distinct (group, value) pairs, and
+    when every group column is a string or integral type, one
+    numpy kernel ranks all pairs in one task (:func:`_rank_kernel`). A
+    group whose key is null is ranked like any other on both paths.
+
+    At or above it the cumulative ranks are TWO-LEVEL AND BUCKET-PRUNED:
+    distinct values bucketize into ``n_buckets`` equal-width ranges per
+    group, bucket subtotals prefix-sum in a tiny per-group window
     (<= n_buckets rows), and each requested rank (k and k+1 per
     (group, prob)) is located to its bucket FROM THE SUBTOTALS ALONE —
     only the located buckets' distinct values (about
@@ -164,24 +201,51 @@ def exact_percentiles(
         df = df.withColumn("_g", F.lit(0))
         gcols = ["_g"]
 
-    # The distinct-(group, value) counts are persist()-cached. Every
-    # downstream branch (bucket bounds, bucket subtotals, totals, the
-    # lower- and upper-bracket containment joins) consumes this table,
-    # and Spark re-derives a lazy subtree per consumer — without the
-    # cache the FACT is re-scanned ~10x per call (caught by
-    # tests/test_plans.py::test_trimmed_stats_band_broadcast). persist()
-    # (not an eager checkpoint) keeps plan construction job-free: the
-    # first stage that touches the counts materializes them and every
-    # other branch reads the InMemoryTableScan. The counts are the
-    # bounded "sketch" of the data (distinct values, never the row
-    # multiset) — exactly the state this operator is allowed to hold;
-    # ContextCleaner reclaims the blocks when the plan is dropped. A
-    # caller computing percentiles of the same (table, group, value)
-    # repeatedly passes the table back in via ``counts=``
-    # (:func:`distinct_value_counts`) so it materializes once.
+    # The distinct-(group, value) counts are persist()-cached. The
+    # distributed path's branches (bucket bounds, bucket subtotals,
+    # totals, the lower- and upper-bracket containment joins) all consume
+    # this table, and Spark re-derives a lazy subtree per consumer —
+    # without the cache the FACT is re-scanned ~10x per call (caught by
+    # tests/test_plans.py::test_trimmed_stats_band_broadcast). The path
+    # decision's count() materializes the cache, so every consumer reads
+    # the InMemoryTableScan. The counts are the bounded "sketch" of the
+    # data (distinct values, never the row multiset) — exactly the state
+    # this operator is allowed to hold. A caller computing percentiles of
+    # the same (table, group, value) repeatedly passes the table back in
+    # via ``counts=`` (:func:`distinct_value_counts`) so it materializes
+    # once.
     if counts is None:
         counts = distinct_value_counts(df, gcols, value, weight)
         _local_persisted.append(counts)
+    small = all(
+        isinstance(counts.schema[c].dataType, _KERNEL_KEY_TYPES) for c in gcols
+    ) and counts.count() < SMALL_PERCENTILE_PAIRS
+    if small:
+        out = _rank_one_task(counts, gcols, probs, names)
+    else:
+        out, offsets = _rank_distributed(counts, gcols, probs, names, n_buckets)
+        _local_persisted.append(offsets)
+    # hand this call's cached frames to the release registry: the NEXT
+    # exact_percentiles call (or an explicit release_percentile_state())
+    # unpersists them, by which time this output has been materialized
+    _PREV_CALL_STATE.extend(_local_persisted)
+    return out.drop("_g") if drop_key else out
+
+
+def _rank_distributed(
+    counts: DataFrame,
+    gcols: list[str],
+    probs: Sequence[float],
+    names: list[str],
+    n_buckets: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The two-level, bucket-pruned ranks of :func:`exact_percentiles`.
+    Returns the output and the persisted bucket offsets it reads."""
+    # The group travels as one struct key. A struct is never null, so a
+    # group whose key is null ranks like any other (GROUP BY semantics, as
+    # in the built-in) instead of dropping out of the equi-joins below.
+    counts = counts.select(F.struct(*gcols).alias("_key"), "_v", "_cnt")
+    gcols = ["_key"]
     # Bucket assignment must be MONOTONE in _v within each group (so
     # ordering by (_b, _v) == ordering by _v); any deterministic monotone
     # map works — it only partitions the ranking work. NaN sorts greatest
@@ -233,7 +297,6 @@ def exact_percentiles(
             "_off"
         ),
     ).persist()
-    _local_persisted.append(offsets)
     totals = offsets.groupBy(*gcols).agg(F.sum("_bt").alias("_n"))
 
     # (group, prob) driver table: groups-cardinality x len(probs) — tiny.
@@ -321,11 +384,98 @@ def exact_percentiles(
         for p, name in zip(probs, names)
     ]
     out = long_form.groupBy(*gcols).agg(*agg_cols)
-    # hand this call's cached frames to the release registry: the NEXT
-    # exact_percentiles call (or an explicit release_percentile_state())
-    # unpersists them, by which time this output has been materialized
-    _PREV_CALL_STATE.extend(_local_persisted)
-    return out.drop("_g") if drop_key else out
+    return out.select("_key.*", *names), offsets
+
+
+def _rank_one_task(
+    counts: DataFrame, gcols: list[str], probs: Sequence[float], names: list[str]
+) -> DataFrame:
+    """The one-task path of :func:`exact_percentiles`: every counts row
+    goes to :func:`_rank_kernel` in one task. Group keys travel with a
+    null flag each, integral keys null-coalesced (see _KERNEL_KEY_TYPES)."""
+    keys = [counts.schema[c] for c in gcols]
+    sent = [
+        F.coalesce(F.col(k.name), F.lit(0).cast(k.dataType)).alias(k.name)
+        if isinstance(k.dataType, IntegralType)
+        else F.col(k.name)
+        for k in keys
+    ]
+    nulls = [F.col(c).isNull().alias(f"_null{i}") for i, c in enumerate(gcols)]
+    schema = StructType(
+        [StructField(k.name, k.dataType) for k in keys]
+        + [StructField(n, DoubleType()) for n in names]
+    )
+    kernel = partial(_rank_kernel, gcols, [float(p) for p in probs], names)
+    return one_task(counts.select(*sent, *nulls, "_v", "_cnt"), schema, kernel)
+
+
+def _rank_kernel(gcols, probs, names, *arrays):
+    """Per group: sort by value (NaN last), cumsum the counts, find ranks
+    ``k`` and ``k + 1`` by ``searchsorted`` and interpolate with the
+    distributed path's decision tree and operand order."""
+    n_keys = len(gcols)
+    keys, nulls = arrays[:n_keys], arrays[n_keys : 2 * n_keys]
+    v = arrays[-2].astype(np.float64)
+    cnt = arrays[-1].astype(np.int64)
+    # one dense code per distinct key tuple; a null key is its own value
+    code = np.zeros(len(v), np.int64)
+    for a in (*keys, *nulls):
+        part, uniq = pd.factorize(a, use_na_sentinel=False)
+        code = pd.factorize(code * len(uniq) + part)[0]
+    order = np.lexsort((v, code))
+    v, cnt = v[order], cnt[order]
+    start, size = groups(code[order])
+    cum = np.cumsum(cnt)
+    base = cum[start] - cnt[start]
+    n = cum[start + size - 1] - base
+    last = max(len(v) - 1, 0)
+
+    def at_rank(r):
+        """The value at rank ``r`` of each group, and whether it exists."""
+        idx = np.searchsorted(cum, base + r, side="right")
+        return v[np.minimum(idx, last)], (0 <= r) & (r < n)
+
+    present = np.zeros(len(start), bool)
+    pcts = []
+    with np.errstate(invalid="ignore", over="ignore"):
+        for p in probs:
+            pos = p * (n - 1).astype(np.float64)
+            k = np.floor(pos).astype(np.int64)
+            k_d = k.astype(np.float64)
+            v_lo, has_lo = at_rank(k)
+            v_hi, has_hi = at_rank(k + 1)
+            # Spark SQL equality: NaN equals NaN, and -0.0 equals 0.0
+            same = (v_hi == v_lo) | (np.isnan(v_hi) & np.isnan(v_lo))
+            exact = pos - k_d == 0.0
+            pct = np.where(
+                exact | same,
+                v_lo,
+                (k_d + 1.0 - pos) * v_lo + (pos - k_d) * v_hi,
+            )
+            pcts.append((pct, ~has_lo | (~exact & ~has_hi)))
+            present |= has_lo | has_hi
+    first = order[start[present]]
+    out = {
+        c: _with_nulls(a[first], b[first].astype(bool))
+        for c, a, b in zip(gcols, keys, nulls)
+    }
+    for name, (pct, null) in zip(names, pcts):
+        out[name] = _with_nulls(pct[present], null[present])
+    return out
+
+
+def _with_nulls(values: np.ndarray, null: np.ndarray):
+    """``values`` as a pandas array whose nulls are exactly ``null``: a
+    NaN stays NaN on its way back to Arrow instead of turning null, and
+    an integer column keeps int64."""
+    if not len(values):
+        return np.empty(0, object)
+    kind = values.dtype.kind
+    if kind == "f":
+        return pd.arrays.FloatingArray(values, null)
+    if kind in "iu":
+        return pd.arrays.IntegerArray(values, null)
+    return np.where(null, None, values)
 
 
 def exact_outlier_counts(

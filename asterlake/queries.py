@@ -2534,10 +2534,12 @@ def q_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2s cheaper than the combined countDistinct agg at sf0.1, round-4
     verdict #4); sketches share one scan with no row multiplication; and
     the exact percentile REFERENCE values come from the bounded-state
-    two-pass form (operators/stats.exact_percentiles, bit-equal to the
-    built-in) so no per-group value-buffer aggregate exists anywhere in
-    the plan — the buffer the sketches exist to avoid must not sneak
-    back in as their verifier."""
+    distinct-value counts (operators/stats.exact_percentiles, bit-equal
+    to the built-in) so the built-in's per-group buffer — a hash map of
+    every distinct value to its count, merged on one reducer — exists
+    nowhere in the plan: the buffer the sketches exist to avoid must not
+    sneak back in as their verifier. At these sizes the counts rank in
+    one task (stats.SMALL_PERCENTILE_PAIRS)."""
     from asterlake.operators.stats import exact_percentiles
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -3276,12 +3278,14 @@ def q_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolated percentiles per group (the non-approx
     counterpart of q_sketch_distinct's KLL quantiles) — via the two-pass
     distinct-value-counts shape (operators/stats.py), NOT the built-in
-    `percentile` aggregate: the built-in buffers every group's full value
-    multiset in one aggregation buffer, which is the scale-killer at 100 TB
-    (billions of rows per returnflag). The two-pass form shuffles only
-    distinct (group, value) pairs and reproduces the built-in's
-    interpolation expression bit-for-bit (pinned by
-    tests/test_stats.py). The counts ride the _flag_qty_counts memo
+    `percentile` aggregate: the built-in keeps each group's hash map of
+    every distinct value to its count in one aggregation buffer, merged on
+    one reducer, which is the scale-killer at 100 TB. The two-pass form
+    shuffles only distinct (group, value) pairs and reproduces the
+    built-in's interpolation expression bit-for-bit (pinned by
+    tests/test_stats.py). This query's ~150 pairs rank in one task
+    (stats.SMALL_PERCENTILE_PAIRS): traced on 4 cores, the ranking went
+    from 19 jobs to 1. The counts ride the _flag_qty_counts memo
     shared with q_weighted_median (r8; bit-exactness argued at the memo
     declaration)."""
     from asterlake.operators.stats import exact_percentiles
@@ -5298,8 +5302,11 @@ def q_trimmed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact trimmed sum. The aggregate -> broadcast-back ->
     reaggregate shape is how per-group normalization runs at 100 TB (the
     band table is groups-sized, the fact is scanned twice but never
-    shuffled by value). Percentile bands come from the scale-safe two-pass
-    shape (operators/stats.py), not the value-buffering built-in."""
+    shuffled by value). Percentile bands come from the scale-safe
+    distinct-value counts (operators/stats.py), not the built-in, whose
+    per-group buffer maps every distinct value to its count on one
+    reducer. At sf0.1 the ~594k (flag, price) pairs rank in one task
+    (stats.SMALL_PERCENTILE_PAIRS)."""
     from asterlake.operators.stats import exact_percentiles
 
     li = load_table(spark, sf_dir, "lineitem").select(

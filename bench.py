@@ -69,11 +69,11 @@ def main() -> None:
         spark.range(8).mapInPandas(lambda it: it, "id long").write.format(
             "noop"
         ).mode("overwrite").save()
-        # warm the percentile rank machinery on SYNTHETIC data that
-        # shares no memo with any declared query: the first execution of
-        # the two-level bucket-rank plan shape pays a one-time compile
-        # that lands on whichever family member runs first (measured at
-        # sf0.1: family first-runs 26.7s -> 17.6s with this warm).
+        # warm the percentile rank path on SYNTHETIC data that shares no
+        # memo with any declared query: its first execution pays a
+        # one-time compile that lands on whichever family member runs
+        # first (measured at sf0.1 for the distributed rank plan: family
+        # first-runs 26.7s -> 17.6s with this warm).
         from pyspark.sql import functions as _F
 
         from asterlake.operators.stats import exact_percentiles

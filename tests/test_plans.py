@@ -493,12 +493,15 @@ def test_drift_queries_scan_facts_only_into_cached_counts(spark):
             assert any(r < p for r in relations), (name, tree[p])
 
 
-def test_exact_percentiles_bucket_pruned(spark):
+def test_exact_percentiles_bucket_pruned(spark, monkeypatch):
     """The rank machinery must never sort the full distinct-value set:
     each requested rank locates its bucket from the subtotal table and
     the within-bucket window's input is LeftSemi-pruned to just those
     buckets (r6 rewrite). The prune shows up as a LeftSemi join in the
     plan; the value-buffering Percentile aggregate must stay absent."""
+    from asterlake.operators import stats
+
+    monkeypatch.setattr(stats, "SMALL_PERCENTILE_PAIRS", 0)  # distributed
     plan = _plan(spark, "q_percentiles_exact")
     assert "LeftSemi" in plan
     assert "percentile" not in plan.lower()

@@ -5,8 +5,8 @@ decorator or ``QUERIES["name"] = ...`` statement in ``asterlake/queries.py``
 fixes a query's position, and a later re-assignment (an oracle injected
 after the def) keeps it. The memo registry and the driver contract in
 ``__spark_entry__`` must agree with that inventory. Runtime conf writes
-stay in ``session.py``, the memory-sink drain in one helper, and every
-streaming run in one runner.
+stay in ``session.py``, the memory-sink drain in one helper, every
+streaming run in one runner, and every one-task kernel in one runner.
 """
 
 from __future__ import annotations
@@ -118,5 +118,21 @@ def test_one_available_now_runner():
             and kw.value.value is True
             for kw in call.keywords
         )
+    ]
+    assert len(runs) == 1, runs
+
+
+def test_one_single_task_kernel_runner():
+    """Every ``coalesce(1).mapInPandas`` kernel runs through
+    ``operators._kernels.one_task``."""
+    runs = [
+        f"{path}:{call.lineno}"
+        for path, call in _calls("mapInPandas")
+        if isinstance(call.func.value, ast.Call)
+        and isinstance(call.func.value.func, ast.Attribute)
+        and call.func.value.func.attr == "coalesce"
+        and len(call.func.value.args) == 1
+        and isinstance(call.func.value.args[0], ast.Constant)
+        and call.func.value.args[0].value == 1
     ]
     assert len(runs) == 1, runs

@@ -93,6 +93,31 @@ def test_nulls_single_value_and_tiny_groups(spark):
     assert mine["b"] == (7.5, 7.5)  # single-value group, any p
 
 
+@pytest.mark.parametrize("limit", [0, 10**12], ids=["distributed", "one_task"])
+def test_null_key_group_matches_builtin(spark, monkeypatch, limit):
+    """A group whose key is null is a group (GROUP BY semantics): both
+    paths return it with the built-in's values."""
+    from asterlake.operators import stats
+
+    monkeypatch.setattr(stats, "SMALL_PERCENTILE_PAIRS", limit)
+    df = spark.createDataFrame(
+        [(None, 1.0), (None, 4.0), (None, 2.0), ("a", 3.0)],
+        "g string, v double",
+    )
+    builtin = {
+        r["g"]: _bits(r["p"])
+        for r in df.groupBy("g").agg(F.expr("percentile(v, 0.4)").alias("p"))
+        .collect()
+    }
+    mine = {
+        r["g"]: _bits(r["p"])
+        for r in exact_percentiles(df, ["g"], "v", [0.4], out_names=["p"])
+        .collect()
+    }
+    assert None in builtin
+    assert mine == builtin
+
+
 def test_plan_has_no_value_buffer_aggregate(spark, lineitem):
     plan = exact_percentiles(
         lineitem, ["l_returnflag"], "l_extendedprice", [0.05, 0.95]
@@ -337,8 +362,11 @@ def test_table_profile_single_job_and_values(spark):
     assert node_count(plan, "Scan parquet") == 1
 
 
-def test_two_level_ranks_invariant_to_bucket_count(spark, lineitem):
+def test_two_level_ranks_invariant_to_bucket_count(spark, lineitem, monkeypatch):
+    from asterlake.operators import stats
     from asterlake.operators.stats import exact_percentiles
+
+    monkeypatch.setattr(stats, "SMALL_PERCENTILE_PAIRS", 0)  # distributed
 
     probs = [0.25, 0.5, 0.9]
     a = exact_percentiles(
@@ -354,52 +382,44 @@ def test_two_level_ranks_invariant_to_bucket_count(spark, lineitem):
             assert _bits(x) == _bits(y)
 
 
-def test_percentile_call_state_is_released_by_next_call(spark, lineitem):
-    """Each exact_percentiles call persists its counts + offsets; a
-    session issuing many percentile queries must not accumulate those
-    blocks (ADVICE r6). The next call releases the previous call's
-    state, and release_percentile_state() empties it on demand —
-    verified against the JVM's persistent-RDD registry."""
+def test_percentile_call_state_is_released_by_next_call(
+    spark, lineitem, monkeypatch
+):
+    """Each exact_percentiles call persists its counts (+ offsets on
+    the distributed path, nothing more on the one-task path); a session
+    issuing many percentile queries must not accumulate those blocks
+    (ADVICE r6). The next call releases the previous call's state, and
+    release_percentile_state() empties it on demand — verified against
+    the JVM's persistent-RDD registry, on both paths. The registry is
+    compared by RDD id: the async ContextCleaner may drop other tests'
+    dead blocks mid-test, and RDD ids are never reused."""
+    from asterlake.operators import stats
     from asterlake.operators.stats import (
         exact_percentiles,
         release_percentile_state,
     )
 
-    def n_persistent() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persistent() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    release_percentile_state()  # drop leftovers from earlier tests
-    # Quiesce the ASYNC ContextCleaner before baselining: other tests'
-    # dead cache/checkpoint blocks stay registered until a JVM GC, and
-    # one firing MID-TEST shrinks the registry underneath the equality
-    # assertions below (observed as a session-composition flake in the
-    # r14 tier split — the count is global, not percentile-owned).
-    # Force the GC now and poll until the registry size holds still.
-    import gc
-    import time
-
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    prev = -1
-    for _ in range(20):
-        cur = n_persistent()
-        if cur == prev:
-            break
-        prev = cur
-        time.sleep(0.2)
-    base = n_persistent()
-    exact_percentiles(
-        lineitem, ["l_returnflag"], "l_extendedprice", [0.5]
-    ).collect()
-    after_one = n_persistent()
-    assert after_one > base  # counts + offsets are live for the output
-    exact_percentiles(
-        lineitem, ["l_returnflag"], "l_quantity", [0.25, 0.9]
-    ).collect()
-    # the second call released the first call's frames: no growth
-    assert n_persistent() == after_one
-    release_percentile_state()
-    assert n_persistent() == base
+    for limit, n_state in ((0, 2), (10**12, 1)):  # distributed, one task
+        monkeypatch.setattr(stats, "SMALL_PERCENTILE_PAIRS", limit)
+        release_percentile_state()  # drop leftovers from earlier tests
+        before = persistent()
+        exact_percentiles(
+            lineitem, ["l_returnflag"], "l_extendedprice", [0.5]
+        ).collect()
+        first = persistent() - before
+        assert len(first) == n_state  # live for the output
+        exact_percentiles(
+            lineitem, ["l_returnflag"], "l_quantity", [0.25, 0.9]
+        ).collect()
+        # the second call released the first call's frames: no growth
+        second = persistent() - before
+        assert not first & second
+        assert len(second) == n_state
+        release_percentile_state()
+        assert not persistent() - before
 
 
 def test_memoized_counts_survive_the_release_cycle(spark, lineitem):
@@ -435,12 +455,15 @@ def test_memoized_counts_survive_the_release_cycle(spark, lineitem):
         memo.unpersist()
 
 
-def test_rank_window_is_bucket_partitioned(spark, lineitem):
+def test_rank_window_is_bucket_partitioned(spark, lineitem, monkeypatch):
     """The within-bucket cumsum must partition by (group, bucket) — no
     window over a group's FULL distinct-value set (the single-reducer
     cliff this two-level design removes)."""
+    from asterlake.operators import stats
     from asterlake.operators.stats import exact_percentiles
     from asterlake.plans.inspect import plan_string
+
+    monkeypatch.setattr(stats, "SMALL_PERCENTILE_PAIRS", 0)  # distributed
 
     plan = plan_string(
         exact_percentiles(lineitem, ["l_returnflag"], "l_extendedprice", [0.5])
@@ -452,6 +475,21 @@ def test_rank_window_is_bucket_partitioned(spark, lineitem):
     assert value_sorted, specs
     for s in value_sorted:
         assert "_b#" in s, s  # partitioned by bucket, not group-only
+
+
+def test_small_input_ranks_in_one_task(spark, lineitem, monkeypatch):
+    """Below SMALL_PERCENTILE_PAIRS the ranks come from one numpy kernel:
+    the plan holds exactly one MapInPandas and no Window."""
+    from asterlake.operators import stats
+    from asterlake.operators.stats import exact_percentiles
+    from asterlake.plans.inspect import has_node, node_count, plan_string
+
+    monkeypatch.setattr(stats, "SMALL_PERCENTILE_PAIRS", 10**12)
+    plan = plan_string(
+        exact_percentiles(lineitem, ["l_returnflag"], "l_extendedprice", [0.5])
+    )
+    assert node_count(plan, "MapInPandas") == 1
+    assert not has_node(plan, "Window")
 
 
 def test_weighted_percentiles_match_builtin_frequency_form(spark, lineitem):
